@@ -80,8 +80,10 @@ object CurveRanges {
     val out = ArrayBuffer.empty[(Long, Long)]
     var expanded = 0
 
+    // an origin is dead once emitted, so the Hilbert encode may overwrite
+    // it instead of copying it
     def encode(origin: Array[Long]): Long =
-      (if (hilbert) SFC.hilbertEncode(origin, bits) else SFC.mortonEncode(origin, bits)).lo
+      (if (hilbert) SFC.hilbertEncodeInPlace(origin, bits, n) else SFC.mortonEncode(origin, bits, n)).lo
 
     def emit(origin: Array[Long], level: Int): Unit = {
       val blockBits = n * (bits - level)

@@ -51,8 +51,7 @@ object CurveRuntime {
 
   private def encodeU(arr: ArrayData, tag: Int, bits: Int, n: Int, hilbert: Boolean): U128 = {
     val xs = extract(arr, tag, n)
-    if (hilbert) SFC.hilbertTransformInPlace(xs, bits, n)
-    SFC.mortonEncode(xs, bits, n)
+    if (hilbert) SFC.hilbertEncodeInPlace(xs, bits, n) else SFC.mortonEncode(xs, bits, n)
   }
 
   /** Encode with output width <= 64: result in the low long. */
@@ -60,11 +59,15 @@ object CurveRuntime {
     encodeU(arr, tag, bits, n, hilbert).lo
 
   /** Encode with u64 output surfaced as Decimal(20,0) (order-preserving). */
-  def encodeDecimal(arr: ArrayData, tag: Int, bits: Int, n: Int, hilbert: Boolean): Decimal = {
-    val lo = encodeU(arr, tag, bits, n, hilbert).lo
-    if (lo >= 0) Decimal(lo)
-    else Decimal(new java.math.BigDecimal(java.lang.Long.toUnsignedString(lo)), 20, 0)
-  }
+  def encodeDecimal(arr: ArrayData, tag: Int, bits: Int, n: Int, hilbert: Boolean): Decimal =
+    unsignedDecimal(encodeU(arr, tag, bits, n, hilbert).lo)
+
+  private val TwoTo64 = java.math.BigInteger.ONE.shiftLeft(64)
+
+  /** A u64 bit pattern as Decimal(20,0). */
+  private def unsignedDecimal(v: Long): Decimal =
+    if (v >= 0) Decimal(v)
+    else Decimal(new java.math.BigDecimal(java.math.BigInteger.valueOf(v).add(TwoTo64)), 20, 0)
 
   /** Encode with u128 output as 16-byte big-endian binary (sorts like u128). */
   def encodeBinary(arr: ArrayData, tag: Int, bits: Int, n: Int, hilbert: Boolean): Array[Byte] =
@@ -118,11 +121,7 @@ object CurveRuntime {
       case TLong  => UnsafeArrayData.fromPrimitiveArray(xs)
       case TFloat => UnsafeArrayData.fromPrimitiveArray(xs.map(v => java.lang.Float.intBitsToFloat(v.toInt)))
       case TDouble => UnsafeArrayData.fromPrimitiveArray(xs.map(java.lang.Double.longBitsToDouble))
-      case 6 =>
-        new GenericArrayData(xs.map { v =>
-          if (v >= 0) Decimal(v)
-          else Decimal(new java.math.BigDecimal(java.lang.Long.toUnsignedString(v)), 20, 0)
-        }.toArray[Any])
+      case 6 => new GenericArrayData(xs.map(unsignedDecimal).toArray[Any])
     }
   }
 

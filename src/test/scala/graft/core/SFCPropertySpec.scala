@@ -63,18 +63,53 @@ class SFCPropertySpec extends AnyFunSuite {
 
   test("magic-mask fast paths == bit-by-bit generic interleave (both directions)") {
     val rnd = new Random(47)
-    for ((bits, n) <- Seq((8, 2), (16, 2), (32, 2), (8, 4), (16, 4)); _ <- 1 to 2000) {
+    for ((bits, n) <- Seq((8, 2), (16, 2), (32, 2), (64, 2), (8, 4), (16, 4)); _ <- 1 to 2000) {
       val xs = Array.fill(n)(mask(rnd.nextLong(), bits))
       val fast = mortonEncode(xs, bits, n)
       assert(fast == mortonEncodeGeneric(xs, bits, n), s"encode bits=$bits n=$n xs=${xs.toSeq}")
       // decode of an arbitrary key (not just encode outputs) must agree,
       // including keys with stray bits above n*bits
-      val key = U128(0L, rnd.nextLong())
+      val key = U128(if (bits * n > 64) rnd.nextLong() else 0L, rnd.nextLong())
       val a = new Array[Long](n); val b = new Array[Long](n)
       mortonDecode(key, bits, n, a)
       mortonDecodeGeneric(key, bits, n, b)
       assert(a.toSeq == b.toSeq, s"decode bits=$bits n=$n key=$key")
     }
+  }
+
+  /** Skilling's transform then the bit-by-bit interleave: the reference
+    * the table-driven Hilbert encode must reproduce. */
+  private def skillingKey(xs: Array[Long], bits: Int): U128 = {
+    val x = xs.clone()
+    hilbertTransformInPlace(x, bits)
+    mortonEncodeGeneric(x, bits, x.length)
+  }
+
+  test("table-driven Hilbert encode == Skilling transform + generic interleave") {
+    val p = new Array[Long](2)
+    for (a <- 0L until 256L; b <- 0L until 256L) { // the full 2-D 8-bit grid
+      p(0) = a; p(1) = b
+      assert(hilbertEncode(p, 8) == skillingKey(p, 8), s"bits=8 xs=${p.toSeq}")
+    }
+    val rnd = new Random(48)
+    for ((bits, n) <- Seq((16, 2), (32, 2), (8, 4), (16, 4)); _ <- 1 to 200000) {
+      val xs = Array.fill(n)(mask(rnd.nextLong(), bits))
+      assert(hilbertEncode(xs, bits) == skillingKey(xs, bits), s"bits=$bits n=$n xs=${xs.toSeq}")
+    }
+    // every width CurveRanges may pass: 4-D takes the table at all of
+    // them, 2-D only at multiples of 4
+    for (n <- Seq(2, 4); bits <- 1 to 64 / n; _ <- 1 to 500) {
+      val xs = Array.fill(n)(mask(rnd.nextLong(), bits))
+      assert(hilbertEncode(xs, bits) == skillingKey(xs, bits), s"bits=$bits n=$n xs=${xs.toSeq}")
+    }
+  }
+
+  test("table-driven Hilbert encode: 8 states at n = 2, 384 at n = 4; leaves the input alone") {
+    assert(hilbertStates(2).size == 8)
+    assert(hilbertStates(4).size == 384)
+    val xs = Array(3L, 5L, 7L, 11L)
+    val k = hilbertEncodeInPlace(xs, 16, 4)
+    assert(xs.toSeq == Seq(3L, 5L, 7L, 11L) && k == skillingKey(xs, 16))
   }
 
   test("Morton interleave matches naive bit spec (elem 0 -> MSB of each group)") {

@@ -215,6 +215,39 @@ class CurveExpressionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sks == sks.sorted)
   }
 
+  test("u64 keys below, at and above 2^63 round-trip through Decimal(20,0) and curve_key_str") {
+    import graft.functions.{Curves => C}
+    import spark.implicits._
+    val two63 = BigInt(1) << 63
+    val keys = Seq(two63 - 1, two63, two63 + 1, (BigInt(1) << 64) - 1)
+    // per key: the 2-D int point whose Hilbert key it is, and the key as a
+    // 1-D bigint point (the 1-D curve is the identity)
+    val local = keys.map { k =>
+      val p = graft.core.SFC.decodeLongs("hilbert", k, 32, 2)
+      (k.toString, p(0).toInt, p(1).toInt, k.toLong)
+    }.toDF("k", "a", "b", "v")
+    val key2 = C.hilbertEncode(col("a"), col("b"))
+    val key1 = C.hilbertEncode(col("v"))
+    // the local relation folds the projection (interpreted eval); the
+    // repartitioned frame runs it in generated code
+    for (df <- Seq(local, local.repartition(2))) {
+      val out = df.select(col("k"), col("a"), col("b"),
+        C.curveKeyStr(key2), C.hilbertDecode(key2, 2),
+        C.curveKeyStr(key1), C.hilbertDecode(key1, 1, unsigned = true),
+        C.hilbertDecode(col("k").cast("decimal(20,0)"), 2)).collect()
+      assert(out.map(_.getString(0)).sorted.toSeq == keys.map(_.toString).sorted)
+      out.foreach { r =>
+        val k = r.getString(0)
+        val pt = Seq(r.getInt(1), r.getInt(2))
+        assert(r.getString(3) == k, s"2-D key of $pt")
+        assert(r.getSeq[Int](4) == pt, s"2-D decode of $k")
+        assert(r.getString(5) == k, "1-D key")
+        assert(r.getSeq[java.math.BigDecimal](6).map(_.toBigInteger.toString) == Seq(k), s"1-D unsigned decode of $k")
+        assert(r.getSeq[Int](7) == pt, s"decode of the decimal literal $k")
+      }
+    }
+  }
+
   test("SparkEntry.entry: flagship query returns curve-ordered rows") {
     val rows = graft.SparkEntry.entry(spark).limit(50).collect()
     assert(rows.nonEmpty)
