@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnShims
 import org.apache.spark.storage.StorageLevel
 
-import graft.functions.{IntersectCountSorted, ShingleHashes, ShingleMinHash, SimHash32, WinnowAnchors}
+import graft.functions.{IntersectCountSorted, ShingleHashes, ShingleMinHash, SignatureMatches, SimHash32, WinnowAnchors}
 import graft.text.TextFunctions
 
 /** Deduplication operators for large-scale corpora.
@@ -17,14 +17,14 @@ import graft.text.TextFunctions
   * shuffle whose cost scales with the data, not with its square:
   *
   *  - exact: one shuffle on the content hash, map-side partial agg.
-  *  - MinHash LSH: signatures are a NARROW projection (higher-order
-  *    array functions over the shingle array — no explode of shingles
-  *    across rows, no shuffle), persisted once so the band join and
-  *    both verify joins reuse it instead of recomputing the 12-hash
-  *    subtree; only the `bands` band hashes per doc are exploded, and
-  *    candidates are generated per (band index, band hash) partition.
-  *    Pathological band buckets (identical-doc clusters colliding in
-  *    every band) are dropped by a size cap so no reducer ever goes
+  *  - MinHash LSH: signatures are a NARROW projection (one native
+  *    pass over the token array — no explode of shingles across rows,
+  *    no shuffle); only the `bands` band hashes per doc are exploded,
+  *    each carrying its doc's signature, and candidates are generated
+  *    AND verified inside their (band index, band hash) bucket by one
+  *    window pass — no join, no cache. Pathological band buckets
+  *    (identical-doc clusters colliding in every band) fall back to a
+  *    star over the bucket above a size cap, so no reducer ever goes
   *    quadratic — at 100 TB this is the standard web-dedup layout.
   *  - SimHash: per-doc narrow aggregate, no shuffle at all.
   *  - n-gram Jaccard: exact set intersection as the VERIFY step over
@@ -135,29 +135,25 @@ object Dedup {
     }: _*)
 
   /** Candidate pairs per (band_idx, band_hash) bucket over an exploded
-    * (doc_id, band_idx, band_hash) frame: buckets up to maxBucketSize
-    * self-join every pair (the two join inputs are the same plan, so
-    * Spark reuses one exchange and no reducer exceeds cap^2 pairs);
-    * over-cap buckets emit the star (bucket-min doc_id, doc_id), which
-    * keeps arbitrarily large near-identical clusters connected at
-    * O(bucket) pairs per band (round-3 ADVICE: dropping those buckets
-    * lost exactly the boilerplate clusters dedup exists for). Shared by
-    * MinHash/Jaccard text dedup here and embedding-cosine dedup
-    * ([[graft.similarity.Similarity.cosinePairs]] — band_hash type is
-    * whatever the caller blocks on). */
+    * (doc_id, band_idx, band_hash) frame — the CAP/STAR RULE: buckets
+    * up to maxBucketSize self-join every pair (the two join inputs are
+    * the same plan, so no reducer exceeds cap^2 pairs); over-cap
+    * buckets emit the star (bucket-min doc_id, doc_id), which keeps
+    * arbitrarily large near-identical clusters connected at O(bucket)
+    * pairs per band (round-3 ADVICE: dropping those buckets lost
+    * exactly the boilerplate clusters dedup exists for). For consumers
+    * that need candidates WITHOUT a signature verify: Jaccard text
+    * dedup, the similarity-graph append/delete verbs, and
+    * embedding-cosine dedup ([[graft.similarity.Similarity.cosinePairs]]
+    * — band_hash type is whatever the caller blocks on).
+    * [[bucketVerifiedPairs]] implements the SAME rule bucket-locally
+    * for the MinHash pairs (DedupSpec pins the two equal). */
   private[graft] def cappedBucketPairs(exploded: DataFrame, maxBucketSize: Int): DataFrame = {
     val w = Window.partitionBy(col("band_idx"), col("band_hash"))
-    // PERSIST the windowed bucket frame (round-17 optimization): its
-    // three consumers below (the self-join's two sides + the star
-    // branch) otherwise each re-derive the explode + window-exchange
-    // subtree — exchange reuse does NOT collapse the copies because
-    // each consumer prunes different columns (measured: the banded
-    // exchange computed 3x per query, q_dedup_minhash plan). The cache
-    // is the exploded band frame (~bands x corpus ids, a fixed small
-    // multiple of the signature frame already persisted), released by
-    // the caller's clearCache like every other internal persist here.
-    // eagerCache, not a bare persist (round-18): the three consumers
-    // racing the unfilled cache re-ran the explode+window subtree
+    // eagerCache the windowed bucket frame (round-17/18): its three
+    // consumers below (the self-join's two sides + the star branch)
+    // otherwise each re-derive the explode + window-exchange subtree,
+    // or race an unfilled lazy cache and re-run it anyway
     val bands = eagerCache(exploded
       .withColumn("bucket_n", count(lit(1)).over(w))
       .withColumn("bucket_min", min(col("doc_id")).over(w)))
@@ -177,7 +173,7 @@ object Dedup {
 
   /** Candidate pairs from banded MinHash LSH over a persisted
     * (doc_id, sig) frame: explode band hashes, then [[cappedBucketPairs]]. */
-  private def bandCandidates(sigs: DataFrame, p: MinHashParams): DataFrame =
+  private[graft] def bandCandidates(sigs: DataFrame, p: MinHashParams): DataFrame =
     cappedBucketPairs(
       sigs.select(col("doc_id"),
         posexplode(bandHashes(col("sig"), p)).as(Seq("band_idx", "band_hash"))),
@@ -188,45 +184,61 @@ object Dedup {
     * least one band AND agreeing on >= minMatches of the signature
     * components (the signature-based Jaccard estimate).
     *
-    * The signature projection is persisted so its 12-hash subtree is
-    * computed ONCE, not once per join branch (round-2 verdict: the
-    * physical plan previously re-projected shingles+12 md5s on all four
-    * branches). Signatures are ~400 bytes/doc — orders of magnitude
-    * smaller than the corpus — so the cache holds at any scale.
-    *
-    * Cache lifecycle: the returned frame is lazy, so the persists can
-    * only be released after the caller's terminal action — callers own
-    * that via `spark.catalog.clearCache()` (as Bench/Verify do) or by
-    * keeping/unpersisting the frame themselves (round-3 ADVICE). */
+    * Lazy: the signature projection is narrow and consumed once by
+    * [[bucketVerifiedPairs]], so nothing is persisted and building the
+    * frame submits no Spark job (DedupSpec counts them). Doc ids are
+    * assumed unique, as everywhere in this object. */
   def minhashPairs(docs: DataFrame, p: MinHashParams = MinHashParams(),
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val sigs = sigFrame(docs, p, idCol, textCol)
-    verifyPairs(bandCandidates(sigs, p), sigs, p)
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    bucketVerifiedPairs(
+      docs.select(col(idCol).as("doc_id"), minhashSignature(col(textCol), p).as("sig")), p)
+
+  /** The MinHash pair pipeline over a (doc_id, sig) frame as ONE
+    * narrow → window → generator pass: every pair is generated AND
+    * verified inside its (band_idx, band_hash) bucket, from signatures
+    * that ride the band explode, so the plan has one band exchange and
+    * one distinct exchange and no join or cache. Same output as
+    * `verifyPairs(bandCandidates(sigs))` — the same CAP/STAR RULE as
+    * [[cappedBucketPairs]] (DedupSpec pins the equality):
+    *
+    *  - window 1 (whole bucket, ordered by doc_id): `bucket_n` and the
+    *    bucket-min member's (doc_id, sig) — the star centre;
+    *  - window 2 (same partitioning and order, so no second exchange or
+    *    sort): each row's EARLIER members, `collect_list` of a struct
+    *    that is NULL in over-cap buckets — collect_list skips NULLs, so
+    *    no row ever holds more than maxBucketSize members and an
+    *    over-cap bucket is never collected into a row;
+    *  - one explode: an in-cap row pairs with each earlier member, an
+    *    over-cap row with the bucket min; `doc_a < doc_b` drops the
+    *    min's self-pair (and NULL ids, like the equi-joins did);
+    *  - score, filter at minMatches, distinct across bands. */
+  private[graft] def bucketVerifiedPairs(sigs: DataFrame, p: MinHashParams): DataFrame = {
+    val ordered = Window.partitionBy(col("band_idx"), col("band_hash"))
+      .orderBy(col("doc_id").asc_nulls_last)
+    val bucket = ordered.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val earlier = ordered.rowsBetween(Window.unboundedPreceding, -1)
+    val member = struct(col("doc_id"), col("sig"))
+    val inCap = col("bucket_n") <= p.maxBucketSize
+    sigs
+      .select(col("doc_id"), col("sig"),
+        posexplode(bandHashes(col("sig"), p)).as(Seq("band_idx", "band_hash")))
+      .select(col("*"),
+        count(lit(1)).over(bucket).as("bucket_n"),
+        first(member).over(bucket).as("bucket_min"))
+      .select(col("doc_id"), col("sig"), col("bucket_n"), col("bucket_min"),
+        collect_list(when(inCap, member)).over(earlier).as("earlier"))
+      .select(col("doc_id").as("doc_b"), col("sig").as("sig_b"),
+        explode(when(inCap, col("earlier")).otherwise(array(col("bucket_min")))).as("a"))
+      .select(col("a.doc_id").as("doc_a"), col("doc_b"),
+        // native component-agreement count; SPEC: verifyPairs' builtin
+        // size(filter(zip_with(...))), equality asserted in DedupSpec
+        ColumnShims.column(SignatureMatches(
+          ColumnShims.expression(col("a.sig")),
+          ColumnShims.expression(col("sig_b")))).as("minhash_matches"))
+      .filter(col("doc_a") < col("doc_b") && col("minhash_matches") >= p.minMatches)
+      .distinct()
   }
 
-  /** The persisted (doc_id, sig) projection shared by the pair
-    * pipelines, built behind a SCALE-ADAPTIVE numbered repartition
-    * (round-17 optimization): when the corpus arrives as fewer splits
-    * than the session's shuffle width — the small-input / few-row-
-    * groups regime, where parquet cannot split further — the CPU-heavy
-    * one-pass minhash would run on a handful of cores AND every
-    * fan-out branch racing the unfilled cache re-runs it from the raw
-    * text (measured: q_dedup_clusters_best re-scanned the corpus ~10x
-    * through the sig subtree). A numbered repartition (AQE never
-    * coalesces an explicit user count) parallelizes the hashing and
-    * makes every downstream branch read the ONE shuffle instead of
-    * re-deriving the projection. When the scan is already at least
-    * shuffle-width parallel (the 100 TB regime), no exchange is added
-    * — the corpus text is never shuffled at scale. Signatures are
-    * per-row-pure, so placement cannot change any result.
-    *
-    * `widen` probes partition width via `.rdd`, which EXECUTES query
-    * stages for any AQE-wrapped plan — so it is GATED on the optimized
-    * plan being scan-shaped (leaf / filter / project only; round-17
-    * ADVICE): a derived frame with an exchange or join underneath is
-    * returned untouched instead of being eagerly run at planning time.
-    * A non-numeric shuffle-partitions conf (e.g. "auto" on forks that
-    * support it) also passes the frame through unchanged. */
   /** Persist + EAGERLY FILL a shared internal frame (round-18): a
     * lazy persist protects against duplicate subtrees only once the
     * cache is FILLED — when the consuming plan's branches submit
@@ -248,6 +260,29 @@ object Dedup {
     p
   }
 
+  /** A narrow per-row projection behind a SCALE-ADAPTIVE numbered
+    * repartition (round-17 optimization): when the corpus arrives as
+    * fewer splits than the session's shuffle width — the small-input /
+    * few-row-groups regime, where parquet cannot split further — a
+    * CPU-heavy per-row pass (the one-pass minhash, the Gram build)
+    * would run on a handful of cores AND every fan-out branch racing
+    * an unfilled cache re-runs it from the raw text (measured:
+    * q_dedup_clusters_best re-scanned the corpus ~10x through the sig
+    * subtree). A numbered repartition (AQE never
+    * coalesces an explicit user count) parallelizes the hashing and
+    * makes every downstream branch read the ONE shuffle instead of
+    * re-deriving the projection. When the scan is already at least
+    * shuffle-width parallel (the 100 TB regime), no exchange is added
+    * — the corpus text is never shuffled at scale. Signatures are
+    * per-row-pure, so placement cannot change any result.
+    *
+    * `widen` probes partition width via `.rdd`, which EXECUTES query
+    * stages for any AQE-wrapped plan — so it is GATED on the optimized
+    * plan being scan-shaped (leaf / filter / project only; round-17
+    * ADVICE): a derived frame with an exchange or join underneath is
+    * returned untouched instead of being eagerly run at planning time.
+    * A non-numeric shuffle-partitions conf (e.g. "auto" on forks that
+    * support it) also passes the frame through unchanged. */
   private[graft] def widen(narrow: DataFrame): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, LeafNode, LogicalPlan, Project => LProject}
     def scanShaped(p: LogicalPlan): Boolean = p match {
@@ -264,22 +299,26 @@ object Dedup {
     else narrow
   }
 
-  private def sigFrame(docs: DataFrame, p: MinHashParams,
+  /** The persisted (doc_id, sig) projection for the pipelines that
+    * read signatures more than once ([[jaccardPairs]]' band explode,
+    * [[writeSimilarityGraph]]'s index write and edge pass);
+    * [[minhashPairs]] reads them once and does not persist. */
+  private[graft] def sigFrame(docs: DataFrame, p: MinHashParams,
       idCol: String, textCol: String): DataFrame =
     // no widen here: the one-pass minhash is ~100-150 ms serial at
-    // bench scale, below widen's own planning cost — the load-bearing
-    // fix for this family is the persisted bucket frame in
-    // [[cappedBucketPairs]] (measured; widen stays on the Gram build
-    // and the semantic-dedup quantize, whose serial cost is ~10x)
+    // bench scale, below widen's own planning cost (measured; widen
+    // stays on the Gram build and the semantic-dedup quantize, whose
+    // serial cost is ~10x)
     docs
       .select(col(idCol).as("doc_id"), minhashSignature(col(textCol), p).as("sig"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-  /** The signature-verify tail shared by [[minhashPairs]] and the
-    * similarity-graph append: candidate (doc_a, doc_b) pairs scored by
-    * component agreement against a (doc_id, sig) frame, filtered at
-    * minMatches. */
-  private def verifyPairs(cand: DataFrame, sigs: DataFrame,
+  /** The signature-verify tail of the similarity-graph append and
+    * delete verbs: candidate (doc_a, doc_b) pairs scored by component
+    * agreement against a (doc_id, sig) frame, filtered at minMatches.
+    * `verifyPairs(bandCandidates(sigs))` is the join-based SPEC of
+    * [[bucketVerifiedPairs]] (DedupSpec pins them equal). */
+  private[graft] def verifyPairs(cand: DataFrame, sigs: DataFrame,
       p: MinHashParams): DataFrame =
     cand
       .join(sigs.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sig", "sig_a"), "doc_a")
@@ -315,7 +354,7 @@ object Dedup {
     val sigs = sigFrame(docs, p, idCol, textCol)
     try {
       writeIndexFromSigs(sigs, s"$path/index", p, "overwrite")
-      verifyPairs(bandCandidates(sigs, p), sigs, p)
+      bucketVerifiedPairs(sigs, p)
         .write.mode("overwrite").parquet(s"$path/edges")
     } finally sigs.unpersist()
   }
@@ -869,9 +908,9 @@ object Dedup {
     * buckets made the join quadratic in the corpus with parallelism
     * capped at the bucket count (round-2 verdict #1).
     *
-    * Cache lifecycle: as with [[minhashPairs]], callers release the
-    * internal persists after their terminal action
-    * (`spark.catalog.clearCache()` or unpersist). */
+    * Cache lifecycle: callers release the internal persists after
+    * their terminal action (`spark.catalog.clearCache()`, as
+    * Bench/Verify do, or unpersist; round-3 ADVICE). */
   def jaccardPairs(docs: DataFrame, p: MinHashParams = JaccardParams,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val sigs = sigFrame(docs, p, idCol, textCol)
@@ -1446,7 +1485,7 @@ object Dedup {
     * functions (graft.oracle.DocSql.substrPairs).
     *
     * Cache lifecycle: callers release the internal persist after
-    * their terminal action (as with [[minhashPairs]]). */
+    * their terminal action (as with [[jaccardPairs]]). */
   def substrPairs(docs: DataFrame, p: SubstrParams = SubstrParams(),
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val toks = TextFunctions.tokens(col(textCol))
@@ -1560,31 +1599,27 @@ object Dedup {
 
   def connectedComponents(pairs: DataFrame, aCol: String = "doc_a", bCol: String = "doc_b",
       maxRounds: Int = 50, localSolveEdges: Long = LocalSolveEdges): DataFrame = {
-    // symmetrize with ONE reference to `pairs` (round-17 optimization):
-    // the former two-branch union embedded the caller's whole pair
-    // pipeline twice in the plan, and the branches raced to compute it
-    // before any cache filled — the explode doubles rows inside the
-    // same stage instead
-    val edges = pairs
-      .select(explode(array(
-        struct(col(aCol).as("src"), col(bCol).as("dst")),
-        struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+    // ONE reference to `pairs`, persisted and counted (the count fills
+    // the cache): the caller's pair pipeline runs once whichever branch
+    // is taken. The threshold is on directed edges, 2 per pair.
+    val ends = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nEdges = edges.count() // also materializes the persist once
-    if (nEdges <= localSolveEdges) {
+    val nPairs = ends.count()
+    if (2 * nPairs <= localSolveEdges) {
       val spark = pairs.sparkSession
       import spark.implicits._
       // Primitive-array union-find (round-7 ADVICE: the earlier boxed
       // HashMap[Long,Long] cost ~50-100 bytes/node — plausibly 0.5-1 GB
       // at the threshold). Here the steady footprint is exact and
-      // small: 16 B/edge (two long arrays) + 12 B/node (sorted id
+      // small: 16 B/pair (two long arrays) + 12 B/node (sorted id
       // array + int parent array) — at the 5M-edge / <=10M-node
-      // threshold, 80 MB + 120 MB, plus a transient Array[Row] from
-      // the collect (~40 B/edge, released before the solve). Same
-      // driver-memory order as a large broadcast join.
-      val rows = edges.select(col("src"), col("dst")).collect()
-      edges.unpersist()
+      // threshold, 40 MB + 120 MB, plus a transient Array[Row] from
+      // the collect (~40 B/pair, released before the solve). Same
+      // driver-memory order as a large broadcast join. Union-find is
+      // undirected, so the pairs are collected as they are, not
+      // symmetrized.
+      val rows = ends.collect()
+      ends.unpersist()
       val m = rows.length
       val srcs = new Array[Long](m)
       val dsts = new Array[Long](m)
@@ -1626,6 +1661,13 @@ object Dedup {
       return (0 until nNodes).map(j => (nodes(j), nodes(find(j))))
         .toDF("id", "lbl")
     }
+    // symmetrize with one explode over the cached pairs (round-17:
+    // a two-branch union embedded the caller's pair pipeline twice)
+    val edges = ends
+      .select(explode(array(
+        struct(col("a").as("src"), col("b").as("dst")),
+        struct(col("b").as("src"), col("a").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
     // initial label = min(id, min neighbor) — the first propagation
     // round fused into initialization (one aggregate instead of a
     // distinct + a join round)
@@ -1689,7 +1731,7 @@ object Dedup {
         s"(${maxRounds * SubSteps} propagation steps) — no near-dup " +
         "pair graph has components that elongated")
     lastConvergenceRounds = rounds
-    edges.unpersist()
+    ends.unpersist()
     labels
   }
 
@@ -2252,10 +2294,7 @@ object Dedup {
     * Output: (doc_id, canonical_id, cluster_size). Transitivity is the
     * point: a chain A~B, B~C with A!~C still lands in ONE cluster
     * (DedupSpec pins exactly that shape). The DuckDB oracle recomputes
-    * the closure independently with a recursive min-label CTE.
-    *
-    * Cache lifecycle: as with [[minhashPairs]], callers release the
-    * internal persists after their terminal action. */
+    * the closure independently with a recursive min-label CTE. */
   def clusters(docs: DataFrame, p: MinHashParams = MinHashParams(),
       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     clustersOf(docs,

@@ -1312,8 +1312,9 @@ object DocSql {
   /** Shared CTE chain: shingles -> base hash per shingle (one md5) ->
     * h0..hN affine-family signature -> exploded bands -> distinct
     * candidate pairs, where in-cap buckets self-join all pairs and
-    * over-cap buckets emit the star to the bucket's min doc_id
-    * (mirrors Dedup.bandCandidates' skew rule exactly). Mirrors
+    * over-cap buckets emit the star to the bucket's min doc_id (the
+    * cap/star rule of Dedup.cappedBucketPairs, which
+    * Dedup.bucketVerifiedPairs applies bucket-locally). Mirrors
     * Dedup.shingleBaseHashes / signatureFromBase exactly (same md5
     * base, same (a*h + b) mod 2^31-1 family). */
   /** docs -> shingles -> signatures -> exploded per-band rows

@@ -1138,7 +1138,7 @@ object Similarity {
     * bucket explode and both re-rank joins share one computation; the
     * returned frame is lazy, so callers release it after their terminal
     * action (`spark.catalog.clearCache()`, as Bench/Verify do) — same
-    * convention as [[graft.dedup.Dedup.minhashPairs]] (round-3 ADVICE). */
+    * convention as [[graft.dedup.Dedup.jaccardPairs]] (round-3 ADVICE). */
   def annTopK(emb: DataFrame, probePred: Column, k: Int,
       bands: Int = DefaultBands, bucketShift: Int = DefaultBucketShift,
       idCol: String = "vec_id", vecCol: String = "embedding",

@@ -1203,7 +1203,7 @@ object CorpusOps {
     // corpus on all three consumer branches (rare-hash agg + both
     // postings sides) — see ContaminationParams for the scale trade.
     // Cache lifecycle: caller releases after its terminal action (the
-    // spark.catalog.clearCache() convention of Dedup.minhashPairs).
+    // spark.catalog.clearCache() convention of Dedup.jaccardPairs).
     val posts0 = labeled
       .select(col("doc_id"), col("split"),
         size(col("sh")).cast("long").as("n_sh"), explode(col("sh")).as("h"))

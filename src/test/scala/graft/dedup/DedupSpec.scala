@@ -1,6 +1,8 @@
 package graft.dedup
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -144,6 +146,171 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._2)
     // identical docs agree on all 12 signature components
     assert(pairs.toSeq == (2L to 70L).map(i => (1L, i, 12L)))
+  }
+
+  private def pairSet(df: DataFrame): Set[(Long, Long, Long)] = {
+    val rows = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(rows.length == rows.toSet.size, "duplicate pair rows")
+    rows.toSet
+  }
+
+  /** Runs `body` at shuffle widths 1 and 7 and requires the same result
+    * at both (results must not depend on partitioning); caches are
+    * dropped after each run. */
+  private def atWidths1And7[T](body: => T): T = {
+    val results = Seq(1, 7).map { w =>
+      spark.conf.set("spark.sql.shuffle.partitions", w.toString)
+      try body
+      finally {
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        spark.catalog.clearCache()
+      }
+    }
+    assert(results.distinct.size == 1, s"width-dependent result: $results")
+    results.head
+  }
+
+  /** The join-based SPEC of the MinHash pairs over a (doc_id, sig)
+    * frame: capped band candidates, then both signature joins. */
+  private def joinSpec(sigs: DataFrame, p: Dedup.MinHashParams): Set[(Long, Long, Long)] =
+    pairSet(Dedup.verifyPairs(Dedup.bandCandidates(sigs, p), sigs, p))
+
+  /** minhashPairs(corpus) == the join SPEC over sigFrame(corpus), at
+    * shuffle widths 1 and 7; returns the pair set. */
+  private def assertMinhashPairsEqualSpec(corpus: DataFrame,
+      p: Dedup.MinHashParams): Set[(Long, Long, Long)] =
+    atWidths1And7 {
+      val got = pairSet(Dedup.minhashPairs(corpus, p))
+      val spec = joinSpec(Dedup.sigFrame(corpus, p, "doc_id", "text"), p)
+      assert(got == spec, s"p=$p\nonly new: ${got -- spec}\nonly spec: ${spec -- got}")
+      got
+    }
+
+  test("native SignatureMatches == size(filter(zip_with(===))) incl. NULLs and ragged arrays") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.graft.ColumnShims
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(53)
+    def arr(): Seq[java.lang.Long] =
+      if (rnd.nextInt(10) == 0) null
+      else Seq.fill(rnd.nextInt(14)) {
+        if (rnd.nextInt(12) == 0) null else java.lang.Long.valueOf(rnd.nextInt(3).toLong)
+      }
+    val rows = Seq.fill(400)(Row(arr(), arr()))
+    val t = ArrayType(LongType, containsNull = true)
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+      StructType(Seq(StructField("a", t), StructField("b", t))))
+    def mismatches(in: DataFrame) = in.select(
+        ColumnShims.column(graft.functions.SignatureMatches(
+          ColumnShims.expression(col("a")), ColumnShims.expression(col("b")))).as("native"),
+        size(filter(zip_with(col("a"), col("b"), (x, y) => x === y), m => m))
+          .cast("long").as("spec"))
+      .filter(!col("native").eqNullSafe(col("spec"))).count()
+    // the local relation is folded by the interpreted evaluator; the
+    // repartitioned frame runs the generated code
+    assert(mismatches(spark.createDataFrame(rows.asJava, df.schema)) == 0)
+    assert(mismatches(df.repartition(3)) == 0)
+  }
+
+  test("bucket-local minhashPairs == join SPEC: buckets of exactly cap and cap+1, all-band clusters") {
+    val a = (1 to 30).map(i => s"alpha$i").mkString(" ")
+    val b = (1 to 30).map(i => s"beta$i").mkString(" ")
+    val c = (1 to 30).map(i => s"gamma$i").mkString(" ")
+    val p = Dedup.MinHashParams(maxBucketSize = 8)
+    val corpus = docs(
+      (1L to 8L).map(_ -> a) ++          // exactly cap in every band
+        (101L to 109L).map(_ -> b) ++    // cap + 1 in every band
+        (201L to 220L).map(_ -> c) ++    // a larger all-identical cluster
+        Seq(300L -> (1 to 30).map(i => s"noise$i").mkString(" ")): _*)
+    val got = assertMinhashPairsEqualSpec(corpus, p)
+    val pairs = got.map(t => (t._1, t._2))
+    // B is over cap in every band: star to its min only
+    assert((102L to 109L).forall(i => pairs((101L, i))))
+    assert(!pairs((102L, 103L)))
+    // A is exactly at the cap: full clique
+    assert((for (i <- 1L to 8L; j <- i + 1 to 8L) yield (i, j)).forall(pairs))
+    assert(!pairs.exists(t => t._1 >= 202L && t._1 <= 220L))
+    // with the default cap of 64 the 20-doc cluster is one clique
+    val uncapped = assertMinhashPairsEqualSpec(corpus, Dedup.MinHashParams())
+    assert(uncapped.count(t => t._1 >= 201L && t._1 <= 220L) == 20 * 19 / 2)
+  }
+
+  test("bucket-local pairs == join SPEC: over-cap star whose minimum fails verification") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // 12 hashes in 4 bands of 3; cap 3. Band 0 is one bucket of six docs
+    // whose minimum (doc 1) agrees with nobody outside band 0; docs 2-5
+    // are identical; doc 6 shares bands 0-1 with them; 10 and 11 form an
+    // in-cap bucket; 20 and 21 have NULL signatures (one "" bucket)
+    val twos = Seq[Long](1, 1, 1, 2, 2, 2, 3, 3, 3, 4, 4, 4)
+    val rows = Seq(
+      Row(1L, Seq[Long](1, 1, 1, 10, 11, 12, 13, 14, 15, 16, 17, 18)),
+      Row(2L, twos), Row(3L, twos), Row(4L, twos), Row(5L, twos),
+      Row(6L, Seq[Long](1, 1, 1, 2, 2, 2, 90, 91, 92, 93, 94, 95)),
+      Row(10L, Seq.fill(12)(7L)), Row(11L, Seq.fill(12)(7L)),
+      Row(20L, null), Row(21L, null))
+    val sigs = spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("doc_id", LongType), StructField("sig", ArrayType(LongType, containsNull = false)))))
+    def check(p: Dedup.MinHashParams) = atWidths1And7 {
+      val got = pairSet(Dedup.bucketVerifiedPairs(sigs, p))
+      assert(got == joinSpec(sigs, p), s"p=$p")
+      got
+    }
+    val p = Dedup.MinHashParams(maxBucketSize = 3)
+    assert(check(p) == Set((2L, 3L, 12L), (2L, 4L, 12L), (2L, 5L, 12L), (2L, 6L, 6L), (10L, 11L, 12L)))
+    // minMatches = 0 keeps the failing star pairs of doc 1 (3 matches)
+    val all = check(p.copy(minMatches = 0))
+    assert((2L to 6L).forall(i => all((1L, i, 3L))))
+    assert(check(p.copy(minMatches = 12)) ==
+      Set((2L, 3L, 12L), (2L, 4L, 12L), (2L, 5L, 12L), (10L, 11L, 12L)))
+  }
+
+  test("bucket-local minhashPairs == join SPEC: minMatches 0 and numHashes, randomized small vocab") {
+    val rnd = new scala.util.Random(61)
+    val vocab = Vector("a", "b", "c", "d", "e", "f")
+    // 3-6 tokens over 6 words: partial band collisions everywhere
+    val texts = (1L to 90L).map(i => i -> Seq.fill(3 + rnd.nextInt(4))(vocab(rnd.nextInt(6))).mkString(" "))
+    for (mm <- Seq(0, 12); cap <- Seq(3, 64)) {
+      val p = Dedup.MinHashParams(minMatches = mm, maxBucketSize = cap)
+      val got = assertMinhashPairsEqualSpec(docs(texts: _*), p)
+      assert(got.nonEmpty, s"p=$p")
+    }
+  }
+
+  test("bucket-local minhashPairs == join SPEC: empty corpus and a single doc") {
+    assert(assertMinhashPairsEqualSpec(docs(), Dedup.MinHashParams()).isEmpty)
+    assert(assertMinhashPairsEqualSpec(docs(1L -> "one lonely doc"), Dedup.MinHashParams(minMatches = 0)).isEmpty)
+  }
+
+  test("minhashPairs is lazy: no job at construction, no cache or join, two exchanges") {
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val base = (1 to 40).map(i => s"tok$i").mkString(" ")
+    val corpus = docs((1L to 70L).map(i => i -> base) :+ (71L -> base.replace("tok7", "tokX")): _*)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    val (pairs, plan) =
+      try {
+        val df = Dedup.minhashPairs(corpus)
+        val pl = df.queryExecution.executedPlan
+        ListenerBusDrain.drain(sc)
+        (df, pl)
+      } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 0, "building minhashPairs submitted Spark jobs")
+    val helper = new AdaptiveSparkPlanHelper {}
+    assert(helper.collect(plan) { case s: InMemoryTableScanExec => s }.isEmpty, plan)
+    assert(helper.collect(plan) { case j: BaseJoinExec => j }.isEmpty, plan)
+    assert(helper.collect(plan) { case e: ShuffleExchangeLike => e }.size == 2, plan)
+    assert(pairs.count() > 0)
   }
 
   test("null text: shingles/fingerprint treat NULL as empty string") {
