@@ -299,10 +299,10 @@ object Dedup {
     else narrow
   }
 
-  /** The persisted (doc_id, sig) projection for the pipelines that
-    * read signatures more than once ([[jaccardPairs]]' band explode,
-    * [[writeSimilarityGraph]]'s index write and edge pass);
-    * [[minhashPairs]] reads them once and does not persist. */
+  /** The persisted (doc_id, sig) projection of [[jaccardPairs]] and
+    * [[writeSimilarityGraph]] (whose index write and edge pass both
+    * read it); [[minhashPairs]] reads signatures once and does not
+    * persist them. */
   private[graft] def sigFrame(docs: DataFrame, p: MinHashParams,
       idCol: String, textCol: String): DataFrame =
     // no widen here: the one-pass minhash is ~100-150 ms serial at

@@ -1,14 +1,14 @@
 #!/usr/bin/env python3
 """Paired A/B runs of one perfbench workload in two checkouts.
 
-    python3 tools/ab_pairs.py --parent DIR --change DIR --workload W \
-        --seeds A-B [--seconds 10] [--out runs.jsonl]
+    python3 tools/ab_pairs.py --parent DIR --change DIR --workload W --seeds A-B
 
 For each seed in A..B (inclusive) it runs `python3 perfbench/run.py
 --workload W --seed S --seconds N --trace 0` once in each checkout, one
-after the other; the side that runs first alternates from seed to seed
-(the parent first on even seeds). Each run uses the checkout's own
-perfbench/ and BENCHMARK.json; this script only invokes run.py.
+after the other, with N the `run_seconds` of the change's BENCHMARK.json;
+the side that runs first alternates from seed to seed (the parent first
+on even seeds). Each run uses the checkout's own perfbench/; this script
+only invokes run.py.
 
 For every end-to-end metric of the change's BENCHMARK.json it prints
 each side's median and quartiles, the number of pairs the change wins,
@@ -65,8 +65,7 @@ def run_one(checkout, workload, seed, seconds):
         tail = (p.stderr or p.stdout).strip().splitlines()[-3:]
         return {"ok": False, "error": f"exit {p.returncode}: {' | '.join(tail)}", "steal": steal}
     ok = bool(result.get("correct")) and result.get("failed", 1) == 0
-    return {"ok": ok, "steal": steal, "attempted": result.get("attempted"),
-            "failed": result.get("failed"),
+    return {"ok": ok, "steal": steal,
             "metrics": {k: v["value"] for k, v in result["metrics"].items()}}
 
 
@@ -91,8 +90,6 @@ def main():
     ap.add_argument("--change", required=True, type=Path)
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, type=seed_range, help="A-B, inclusive")
-    ap.add_argument("--seconds", type=int, default=10)
-    ap.add_argument("--out", type=Path, help="append one JSON line per run here")
     a = ap.parse_args()
     for d in (a.parent, a.change):
         if not (d / "perfbench" / "run.py").is_file():
@@ -108,12 +105,8 @@ def main():
     for seed in a.seeds:
         order = ("parent", "change") if seed % 2 == 0 else ("change", "parent")
         for side in order:
-            r = run_one(sides[side], a.workload, seed, a.seconds)
-            r.update(side=side, seed=seed, first=order[0])
+            r = run_one(sides[side], a.workload, seed, bench["run_seconds"])
             runs[side].append(r)
-            if a.out:
-                with a.out.open("a") as f:
-                    f.write(json.dumps(r) + "\n")
             m = r.get("metrics", {})
             steal = "-" if r.get("steal") is None else f"{r['steal']:.3f}"
             print(f"seed {seed} {side:6s} ok={r['ok']} steal={steal} "
