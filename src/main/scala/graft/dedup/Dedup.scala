@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnShims
 import org.apache.spark.storage.StorageLevel
 
-import graft.functions.{IntersectCountSorted, ShingleHashes, ShingleMinHash, SignatureMatches, SimHash32, WinnowAnchors}
+import graft.functions.{IntersectCountSorted, ShingleHashes, ShingleMinHash, SimHash32, WinnowAnchors}
 import graft.text.TextFunctions
 
 /** Deduplication operators for large-scale corpora.
@@ -134,6 +134,12 @@ object Dedup {
         element_at(sig, j * p.rowsPerBand + r + 1).cast("string")): _*)
     }: _*)
 
+  /** The MinHash verify score: the number of signature components on
+    * which two signatures agree. Every MinHash pair pipeline scores
+    * through this one helper. */
+  private[graft] def signatureMatches(a: Column, b: Column): Column =
+    size(filter(zip_with(a, b, (x, y) => x === y), m => m)).cast("long")
+
   /** Candidate pairs per (band_idx, band_hash) bucket over an exploded
     * (doc_id, band_idx, band_hash) frame — the CAP/STAR RULE: buckets
     * up to maxBucketSize self-join every pair (the two join inputs are
@@ -230,11 +236,7 @@ object Dedup {
       .select(col("doc_id").as("doc_b"), col("sig").as("sig_b"),
         explode(when(inCap, col("earlier")).otherwise(array(col("bucket_min")))).as("a"))
       .select(col("a.doc_id").as("doc_a"), col("doc_b"),
-        // native component-agreement count; SPEC: verifyPairs' builtin
-        // size(filter(zip_with(...))), equality asserted in DedupSpec
-        ColumnShims.column(SignatureMatches(
-          ColumnShims.expression(col("a.sig")),
-          ColumnShims.expression(col("sig_b")))).as("minhash_matches"))
+        signatureMatches(col("a.sig"), col("sig_b")).as("minhash_matches"))
       .filter(col("doc_a") < col("doc_b") && col("minhash_matches") >= p.minMatches)
       .distinct()
   }
@@ -325,8 +327,7 @@ object Dedup {
       .join(sigs.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sig", "sig_b"), "doc_b")
       .select(
         col("doc_a"), col("doc_b"),
-        size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y), b => b))
-          .cast("long").as("minhash_matches"))
+        signatureMatches(col("sig_a"), col("sig_b")).as("minhash_matches"))
       .filter(col("minhash_matches") >= p.minMatches)
 
   /** Persist [[minhashPairs]] as the corpus's similarity-graph
@@ -1156,8 +1157,7 @@ object Dedup {
       .select(col("doc_id").as("old_id"), col("sig").as("osig"))
     cand.join(newSigs, "new_id").join(oldSigs, "old_id")
       .select(col("new_id"), col("old_id"),
-        size(filter(zip_with(col("nsig"), col("osig"), (x, y) => x === y), b => b))
-          .cast("long").as("minhash_matches"))
+        signatureMatches(col("nsig"), col("osig")).as("minhash_matches"))
       .filter(col("minhash_matches") >= p.minMatches)
       // a doc already in the index is not a duplicate of itself — makes
       // probing a batch AFTER appending it safe (no self-pairs)
@@ -1182,8 +1182,7 @@ object Dedup {
       .select(col("new_id"), col("old_id")).distinct()
     cand.join(newSigs, "new_id").join(oldSigs, "old_id")
       .select(col("new_id"), col("old_id"),
-        size(filter(zip_with(col("nsig"), col("osig"), (x, y) => x === y), b => b))
-          .cast("long").as("minhash_matches"))
+        signatureMatches(col("nsig"), col("osig")).as("minhash_matches"))
       .filter(col("minhash_matches") >= p.minMatches)
   }
 
