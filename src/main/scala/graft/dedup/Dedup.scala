@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnShims
 import org.apache.spark.storage.StorageLevel
 
-import graft.functions.{IntersectCountSorted, ShingleHashes, ShingleMinHash, SimHash32, WinnowAnchors}
+import graft.functions.{IntersectCountSorted, ShingleHashes, ShingleMinHash, SignatureMatches, SimHash32, WinnowAnchors}
 import graft.text.TextFunctions
 
 /** Deduplication operators for large-scale corpora.
@@ -135,10 +135,16 @@ object Dedup {
     }: _*)
 
   /** The MinHash verify score: the number of signature components on
-    * which two signatures agree. Every MinHash pair pipeline scores
-    * through this one helper. */
+    * which two signatures agree, via the one-pass native expression
+    * [[graft.functions.SignatureMatches]]. Every MinHash pair pipeline
+    * scores through this one helper. The bucket-local pass scores each
+    * candidate once per band it shares, before the distinct, so the
+    * score is on its hot path; there the builtin
+    * `size(filter(zip_with(...)))` (two interpreted lambdas per
+    * component; DedupSpec keeps it as the SPEC) measured slower
+    * (BASELINE.md, "Dedup ledger"). */
   private[graft] def signatureMatches(a: Column, b: Column): Column =
-    size(filter(zip_with(a, b, (x, y) => x === y), m => m)).cast("long")
+    ColumnShims.column(SignatureMatches(ColumnShims.expression(a), ColumnShims.expression(b)))
 
   /** Candidate pairs per (band_idx, band_hash) bucket over an exploded
     * (doc_id, band_idx, band_hash) frame — the CAP/STAR RULE: buckets
