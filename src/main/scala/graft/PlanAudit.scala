@@ -15,7 +15,11 @@ object PlanAudit {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the same codegen-cache sizing as Bench and Verify, so the
+      // audited plans are the ones benchmarked and verified
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { n =>

@@ -12,7 +12,7 @@ import graft.text.TextFunctions
 /** Deduplication operators for large-scale corpora.
   *
   * Designed around one rule: NEVER compare all pairs. Every candidate
-  * set here comes from an equi-join on a blocking key (content hash,
+  * set here stays inside the buckets of a blocking key (content hash,
   * LSH band hash, length bucket), so each stage is a single hash
   * shuffle whose cost scales with the data, not with its square:
   *
@@ -43,15 +43,15 @@ object Dedup {
     * With (12, 4, 3): P(candidate | jaccard j) = 1-(1-j^3)^4 —
     * ~0.99 at j=0.9, ~0.004 at j=0.1.
     *
-    * maxBucketSize caps the all-pairs self-join per (band_idx,
-    * band_hash) bucket: buckets up to the cap emit every pair (at most
-    * cap^2 per reducer); larger buckets — near-identical clusters that
-    * collide in every band, the common case at web scale — fall back to
-    * a STAR over the bucket (each doc paired with the bucket's min
-    * doc_id, O(bucket) pairs), so big clusters stay connected instead
-    * of being dropped (round-3 ADVICE). Deterministic (a size test plus
-    * a min, not a sample), so the DuckDB oracle reproduces it with
-    * window functions. */
+    * maxBucketSize caps the all-pairs pass per (band_idx, band_hash)
+    * bucket ([[bucketPairs]]): buckets up to the cap emit every pair (at
+    * most cap^2 per bucket); larger buckets — near-identical clusters
+    * that collide in every band, the common case at web scale — fall
+    * back to a STAR over the bucket (each doc paired with the bucket's
+    * min doc_id, O(bucket) pairs), so big clusters stay connected
+    * instead of being dropped (round-3 ADVICE). Deterministic (a size
+    * test plus a min, not a sample), so the DuckDB oracle reproduces it
+    * with window functions. */
   final case class MinHashParams(
       numHashes: Int = 12,
       bands: Int = 4,
@@ -146,50 +146,58 @@ object Dedup {
   private[graft] def signatureMatches(a: Column, b: Column): Column =
     ColumnShims.column(SignatureMatches(ColumnShims.expression(a), ColumnShims.expression(b)))
 
-  /** Candidate pairs per (band_idx, band_hash) bucket over an exploded
-    * (doc_id, band_idx, band_hash) frame — the CAP/STAR RULE: buckets
-    * up to maxBucketSize self-join every pair (the two join inputs are
-    * the same plan, so no reducer exceeds cap^2 pairs); over-cap
-    * buckets emit the star (bucket-min doc_id, doc_id), which keeps
-    * arbitrarily large near-identical clusters connected at O(bucket)
-    * pairs per band (round-3 ADVICE: dropping those buckets lost
-    * exactly the boilerplate clusters dedup exists for). For consumers
-    * that need candidates WITHOUT a signature verify: Jaccard text
-    * dedup, the similarity-graph append/delete verbs, and
-    * embedding-cosine dedup ([[graft.similarity.Similarity.cosinePairs]]
-    * — band_hash type is whatever the caller blocks on).
-    * [[bucketVerifiedPairs]] implements the SAME rule bucket-locally
-    * for the MinHash pairs (DedupSpec pins the two equal). */
-  private[graft] def cappedBucketPairs(exploded: DataFrame, maxBucketSize: Int): DataFrame = {
-    val w = Window.partitionBy(col("band_idx"), col("band_hash"))
-    // eagerCache the windowed bucket frame (round-17/18): its three
-    // consumers below (the self-join's two sides + the star branch)
-    // otherwise each re-derive the explode + window-exchange subtree,
-    // or race an unfilled lazy cache and re-run it anyway
-    val bands = eagerCache(exploded
-      .withColumn("bucket_n", count(lit(1)).over(w))
-      .withColumn("bucket_min", min(col("doc_id")).over(w)))
-    val inCap = bands.filter(col("bucket_n") <= maxBucketSize)
-      .select(col("doc_id"), col("band_idx"), col("band_hash"))
-    val allPairs = inCap.as("a")
-      .join(inCap.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_hash") === col("b.band_hash") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    val starPairs = bands
-      .filter(col("bucket_n") > maxBucketSize && col("doc_id") =!= col("bucket_min"))
-      .select(col("bucket_min").as("doc_a"), col("doc_id").as("doc_b"))
-    allPairs.union(starPairs).distinct()
+  /** The CAP/STAR RULE over an exploded (doc_id, band_idx, band_hash
+    * [, payload]) frame, as ONE window → generator pass — the only
+    * Spark-side implementation of the rule. Buckets up to
+    * maxBucketSize emit every pair (no row ever holds more than
+    * maxBucketSize members); larger buckets — near-identical clusters
+    * that collide in every band, the common case at web scale — emit
+    * the STAR (bucket-min doc_id, doc_id), which keeps them connected
+    * at O(bucket) pairs (round-3 ADVICE: dropping those buckets lost
+    * exactly the boilerplate clusters dedup exists for). No join, no
+    * cache: one exchange on the bucket key, and building the frame
+    * submits no job.
+    *
+    *  - window 1 (whole bucket, ordered by doc_id): `bucket_n` and the
+    *    bucket-min member — the star centre;
+    *  - window 2 (same partitioning and order, so no second exchange or
+    *    sort): each row's EARLIER members, `collect_list` of a member
+    *    that is NULL in over-cap buckets — collect_list skips NULLs, so
+    *    an over-cap bucket is never collected into a row;
+    *  - one explode: an in-cap row pairs with each earlier member, an
+    *    over-cap row with the bucket min; `doc_a < doc_b` drops the
+    *    min's self-pair (and NULL ids).
+    *
+    * A member is (doc_id[, payload]); with a payload the output is
+    * (doc_a, doc_b, <payload>_a, <payload>_b), so a verify can score
+    * the pair inside the bucket without joining back ([[minhashPairs]]
+    * passes `sig`). Without one it is the plain candidates of Jaccard,
+    * cosine and semantic dedup, which verify by their own joins
+    * (band_hash is whatever the caller blocks on). A pair sharing
+    * several buckets is emitted once per bucket: callers `distinct()`.
+    * The join form (in-cap self-join + star union) is the SPEC in
+    * DedupSpec. */
+  private[graft] def bucketPairs(exploded: DataFrame, maxBucketSize: Int,
+      payload: Option[String] = None): DataFrame = {
+    val ordered = Window.partitionBy(col("band_idx"), col("band_hash"))
+      .orderBy(col("doc_id").asc_nulls_last)
+    val bucket = ordered.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val earlier = ordered.rowsBetween(Window.unboundedPreceding, -1)
+    val carried = (Seq("doc_id") ++ payload).map(col)
+    val member = struct(carried: _*)
+    val inCap = col("bucket_n") <= maxBucketSize
+    exploded
+      .select(col("*"),
+        count(lit(1)).over(bucket).as("bucket_n"),
+        first(member).over(bucket).as("bucket_min"))
+      .select(carried ++ Seq(col("bucket_n"), col("bucket_min"),
+        collect_list(when(inCap, member)).over(earlier).as("earlier")): _*)
+      .select((col("doc_id").as("doc_b") +: payload.toSeq.map(c => col(c).as(s"${c}_b"))) :+
+        explode(when(inCap, col("earlier")).otherwise(array(col("bucket_min")))).as("a"): _*)
+      .select((col("a.doc_id").as("doc_a") +: col("doc_b") +:
+        payload.toSeq.flatMap(c => Seq(col(s"a.$c").as(s"${c}_a"), col(s"${c}_b")))): _*)
+      .filter(col("doc_a") < col("doc_b"))
   }
-
-  /** Candidate pairs from banded MinHash LSH over a persisted
-    * (doc_id, sig) frame: explode band hashes, then [[cappedBucketPairs]]. */
-  private[graft] def bandCandidates(sigs: DataFrame, p: MinHashParams): DataFrame =
-    cappedBucketPairs(
-      sigs.select(col("doc_id"),
-        posexplode(bandHashes(col("sig"), p)).as(Seq("band_idx", "band_hash"))),
-      p.maxBucketSize)
 
   /** Near-duplicate candidate pairs via banded MinHash LSH.
     * Output: (doc_a, doc_b, minhash_matches) for pairs colliding in at
@@ -205,47 +213,22 @@ object Dedup {
     bucketVerifiedPairs(
       docs.select(col(idCol).as("doc_id"), minhashSignature(col(textCol), p).as("sig")), p)
 
-  /** The MinHash pair pipeline over a (doc_id, sig) frame as ONE
-    * narrow → window → generator pass: every pair is generated AND
-    * verified inside its (band_idx, band_hash) bucket, from signatures
-    * that ride the band explode, so the plan has one band exchange and
-    * one distinct exchange and no join or cache. Same output as
-    * `verifyPairs(bandCandidates(sigs))` — the same CAP/STAR RULE as
-    * [[cappedBucketPairs]] (DedupSpec pins the equality):
-    *
-    *  - window 1 (whole bucket, ordered by doc_id): `bucket_n` and the
-    *    bucket-min member's (doc_id, sig) — the star centre;
-    *  - window 2 (same partitioning and order, so no second exchange or
-    *    sort): each row's EARLIER members, `collect_list` of a struct
-    *    that is NULL in over-cap buckets — collect_list skips NULLs, so
-    *    no row ever holds more than maxBucketSize members and an
-    *    over-cap bucket is never collected into a row;
-    *  - one explode: an in-cap row pairs with each earlier member, an
-    *    over-cap row with the bucket min; `doc_a < doc_b` drops the
-    *    min's self-pair (and NULL ids, like the equi-joins did);
-    *  - score, filter at minMatches, distinct across bands. */
-  private[graft] def bucketVerifiedPairs(sigs: DataFrame, p: MinHashParams): DataFrame = {
-    val ordered = Window.partitionBy(col("band_idx"), col("band_hash"))
-      .orderBy(col("doc_id").asc_nulls_last)
-    val bucket = ordered.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val earlier = ordered.rowsBetween(Window.unboundedPreceding, -1)
-    val member = struct(col("doc_id"), col("sig"))
-    val inCap = col("bucket_n") <= p.maxBucketSize
-    sigs
-      .select(col("doc_id"), col("sig"),
-        posexplode(bandHashes(col("sig"), p)).as(Seq("band_idx", "band_hash")))
-      .select(col("*"),
-        count(lit(1)).over(bucket).as("bucket_n"),
-        first(member).over(bucket).as("bucket_min"))
-      .select(col("doc_id"), col("sig"), col("bucket_n"), col("bucket_min"),
-        collect_list(when(inCap, member)).over(earlier).as("earlier"))
-      .select(col("doc_id").as("doc_b"), col("sig").as("sig_b"),
-        explode(when(inCap, col("earlier")).otherwise(array(col("bucket_min")))).as("a"))
-      .select(col("a.doc_id").as("doc_a"), col("doc_b"),
-        signatureMatches(col("a.sig"), col("sig_b")).as("minhash_matches"))
-      .filter(col("doc_a") < col("doc_b") && col("minhash_matches") >= p.minMatches)
+  /** The MinHash pair pipeline over a (doc_id, sig) frame: the band
+    * explode carries each doc's signature, [[bucketPairs]] pairs it
+    * inside its (band_idx, band_hash) bucket, and the pair is scored
+    * there, filtered at minMatches and made distinct across bands — one
+    * band exchange, one distinct exchange, no join or cache. Same
+    * output as DedupSpec's join SPEC `verifyPairs(bandCandidates(sigs))`,
+    * which pins the equality. */
+  private[graft] def bucketVerifiedPairs(sigs: DataFrame, p: MinHashParams): DataFrame =
+    bucketPairs(
+      sigs.select(col("doc_id"), col("sig"),
+        posexplode(bandHashes(col("sig"), p)).as(Seq("band_idx", "band_hash"))),
+      p.maxBucketSize, Some("sig"))
+      .select(col("doc_a"), col("doc_b"),
+        signatureMatches(col("sig_a"), col("sig_b")).as("minhash_matches"))
+      .filter(col("minhash_matches") >= p.minMatches)
       .distinct()
-  }
 
   /** Persist + EAGERLY FILL a shared internal frame (round-18): a
     * lazy persist protects against duplicate subtrees only once the
@@ -324,8 +307,8 @@ object Dedup {
   /** The signature-verify tail of the similarity-graph append and
     * delete verbs: candidate (doc_a, doc_b) pairs scored by component
     * agreement against a (doc_id, sig) frame, filtered at minMatches.
-    * `verifyPairs(bandCandidates(sigs))` is the join-based SPEC of
-    * [[bucketVerifiedPairs]] (DedupSpec pins them equal). */
+    * Over DedupSpec's join-form band candidates it is also the SPEC of
+    * [[bucketVerifiedPairs]]. */
   private[graft] def verifyPairs(cand: DataFrame, sigs: DataFrame,
       p: MinHashParams): DataFrame =
     cand
@@ -923,7 +906,7 @@ object Dedup {
     val sigs = sigFrame(docs, p, idCol, textCol)
     // eagerCache (round-18): candIds' two branches + both verify joins
     // raced the unfilled candidate cache (see eagerCache)
-    val cand = eagerCache(bandCandidates(sigs, p))
+    val cand = eagerCache(bucketPairs(explodedBands(sigs, "doc_id", p), p.maxBucketSize).distinct())
     // materialize the shingle-hash arrays ONLY for docs that appear in
     // some candidate pair — exact-verify cost scales with the candidate
     // set, not the corpus
@@ -963,7 +946,7 @@ object Dedup {
     * equi-join per band against the old band index. Hot old buckets
     * (boilerplate clusters) are capped to their min-id REPRESENTATIVE
     * (every new doc still links to the cluster through it — the
-    * asymmetric form of [[cappedBucketPairs]]'s star rule), so no
+    * asymmetric form of [[bucketPairs]]' star rule), so no
     * band bucket fans out more than maxBucketSize ways. Deterministic,
     * oracle-replicable. */
   def minhashPairsAgainst(newDocs: DataFrame, oldDocs: DataFrame,
@@ -1557,7 +1540,7 @@ object Dedup {
     * loop) — no all-pairs stage; materialized rounds needed ≈
     * (min-node eccentricity) / SubSteps. LSH bucket graphs keep that
     * ≤ 1 by construction (cliques and stars from
-    * [[cappedBucketPairs]]); THRESHOLD pair graphs (semantic dedup's
+    * [[bucketPairs]]); THRESHOLD pair graphs (semantic dedup's
     * near-threshold cosine chains, measured eccentricity 14 at sf0.1)
     * converge in a handful — the same regime where published
     * MapReduce connected-components algorithms (Kiveris et al. 2014's

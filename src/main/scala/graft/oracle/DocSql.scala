@@ -1313,8 +1313,8 @@ object DocSql {
     * h0..hN affine-family signature -> exploded bands -> distinct
     * candidate pairs, where in-cap buckets self-join all pairs and
     * over-cap buckets emit the star to the bucket's min doc_id (the
-    * cap/star rule of Dedup.cappedBucketPairs, which
-    * Dedup.bucketVerifiedPairs applies bucket-locally). Mirrors
+    * cap/star rule that Dedup.bucketPairs implements as one window
+    * pass for every Spark-side consumer). Mirrors
     * Dedup.shingleBaseHashes / signatureFromBase exactly (same md5
     * base, same (a*h + b) mod 2^31-1 family). */
   /** docs -> shingles -> signatures -> exploded per-band rows

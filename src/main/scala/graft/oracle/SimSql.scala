@@ -640,7 +640,7 @@ object SimSql {
     * band keys (plane i, dim d sign = parity of
     * (1103515245*(i*dims+d+1)) mod 2^31-1, dims derived per row like
     * the Spark side), star-capped bucket pairs (the
-    * Dedup.cappedBucketPairs rule), then the exact integer accept test
+    * Dedup.bucketPairs rule), then the exact integer accept test
     * den*dot^2 >= num*|a|^2*|b|^2 AND dot >= 0 in HUGEINT. */
   def cosinePairs(planes: Int, bandBits: Int, num: Long, den: Long, cap: Int): String =
     s"""WITH $qCte,

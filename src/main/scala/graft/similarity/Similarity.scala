@@ -366,7 +366,7 @@ object Similarity {
     * cardinality per band (2^bandBits — raise it as the corpus grows so
     * per-bucket counts stay bounded); `planes/bandBits` bands set
     * recall; maxBucketSize star-caps pathological buckets
-    * ([[graft.dedup.Dedup.cappedBucketPairs]]). */
+    * ([[graft.dedup.Dedup.bucketPairs]]). */
   final case class CosineParams(
       planes: Int = 48,
       bandBits: Int = 8,
@@ -403,10 +403,11 @@ object Similarity {
     * fixed-point verify.
     *
     * Shape (the only one that survives 100 TB): narrow per-row
-    * signature projection -> explode bands -> capped equi-join bucket
-    * pairs ([[graft.dedup.Dedup.cappedBucketPairs]] — identical skew
-    * story to text MinHash dedup) -> exact verify on candidates only.
-    * No all-pairs stage; every join is an equi-join.
+    * signature projection -> explode bands -> capped bucket-local
+    * pairs ([[graft.dedup.Dedup.bucketPairs]], one window pass —
+    * identical skew story to text MinHash dedup) -> exact verify on
+    * candidates only. No all-pairs stage; the verify joins are
+    * equi-joins.
     *
     * The accept test is exact integer math end-to-end: with q = the
     * 2^20 fixed-point vectors, accept iff dot(qa,qb) >= 0 AND
@@ -430,7 +431,7 @@ object Similarity {
         dotQ(col("qv"), col("qv")).as("n2")))
     val bands = base.select(col("doc_id"),
       posexplode(col("keys")).as(Seq("band_idx", "band_hash")))
-    val cand = Dedup.cappedBucketPairs(bands, p.maxBucketSize)
+    val cand = Dedup.bucketPairs(bands, p.maxBucketSize).distinct()
     val qa = base.select(col("doc_id").as("vec_a"), col("qv").as("qv_a"), col("n2").as("n2_a"))
     val qb = base.select(col("doc_id").as("vec_b"), col("qv").as("qv_b"), col("n2").as("n2_b"))
     cand.select(col("doc_a").as("vec_a"), col("doc_b").as("vec_b"))
@@ -455,7 +456,7 @@ object Similarity {
     * hash-gated (graft.oracle.SimSql.semanticDedup).
     *
     * Stages: assign -> within-cluster candidate pairs (star-capped at
-    * maxClusterSize via [[graft.dedup.Dedup.cappedBucketPairs]], the
+    * maxClusterSize via [[graft.dedup.Dedup.bucketPairs]], the
     * shared skew story) -> exact rational-cosine verify (tau^2 =
     * thresholdNum/thresholdDen, integer math end-to-end) -> min-label
     * connected components ([[graft.dedup.Dedup.connectedComponents]])
@@ -466,7 +467,7 @@ object Similarity {
     * pipeline retains). Docs in no dup group are their own canonical.
     *
     * Shape at 100 TB: assignment is corpus x broadcast(nlist) with a
-    * partial max-struct agg; candidates are an equi-join on list_id
+    * partial max-struct agg; candidates are one window pass per list_id
     * with deterministic star-caps (no all-pairs stage — grow nlist
     * with the corpus so cluster sizes stay bounded, exactly SemDeDup's
     * own k ∝ N prescription); verify cost ∝ candidates; the closure
@@ -499,10 +500,10 @@ object Similarity {
       .agg(max(struct(col("cdot"), (-col("list_id")).as("nl"))).as("mx"))
       .select(col("vec_id"), (-col("mx").getField("nl")).as("list_id"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val cand = Dedup.cappedBucketPairs(
+    val cand = Dedup.bucketPairs(
       asg.select(col("vec_id").as("doc_id"), lit(0).as("band_idx"),
         col("list_id").as("band_hash")),
-      maxClusterSize)
+      maxClusterSize).distinct()
     val n2 = q.select(col("vec_id"), col("qv"), dotQ(col("qv"), col("qv")).as("n2"))
     val qa = n2.select(col("vec_id").as("vec_a"), col("qv").as("qv_a"), col("n2").as("n2_a"))
     val qb = n2.select(col("vec_id").as("vec_b"), col("qv").as("qv_b"), col("n2").as("n2_b"))

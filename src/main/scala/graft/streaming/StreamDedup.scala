@@ -25,7 +25,7 @@ case class DupPair(anchor_id: Long, doc_id: Long, band_idx: Int)
   * one `flatMapGroupsWithState` keyed on (band_idx, band_hash): each
   * bucket keeps its first-arrived document as the anchor and every
   * later arrival emits an (anchor, doc) pair — the streaming analog of
-  * the batch star rule ([[graft.dedup.Dedup.cappedBucketPairs]]),
+  * the batch star rule ([[graft.dedup.Dedup.bucketPairs]]),
   * which also connects a bucket through one hub instead of emitting
   * the quadratic pair set.
   *

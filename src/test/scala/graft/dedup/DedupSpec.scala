@@ -3,6 +3,7 @@ package graft.dedup
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -170,10 +171,69 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     results.head
   }
 
+  /** The join form of the cap/star rule over an exploded (doc_id,
+    * band_idx, band_hash) frame — the SPEC of [[Dedup.bucketPairs]]:
+    * buckets up to maxBucketSize self-join every pair; over-cap buckets
+    * emit the star (bucket-min doc_id, doc_id). */
+  private def cappedBucketPairs(exploded: DataFrame, maxBucketSize: Int): DataFrame = {
+    val w = Window.partitionBy(col("band_idx"), col("band_hash"))
+    val bands = exploded
+      .withColumn("bucket_n", count(lit(1)).over(w))
+      .withColumn("bucket_min", min(col("doc_id")).over(w))
+    val inCap = bands.filter(col("bucket_n") <= maxBucketSize)
+      .select(col("doc_id"), col("band_idx"), col("band_hash"))
+    val allPairs = inCap.as("a")
+      .join(inCap.as("b"),
+        col("a.band_idx") === col("b.band_idx") &&
+          col("a.band_hash") === col("b.band_hash") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+    val starPairs = bands
+      .filter(col("bucket_n") > maxBucketSize && col("doc_id") =!= col("bucket_min"))
+      .select(col("bucket_min").as("doc_a"), col("doc_id").as("doc_b"))
+    allPairs.union(starPairs).distinct()
+  }
+
+  /** Exploded (doc_id, band_idx, band_hash) rows of a (doc_id, sig) frame. */
+  private def bands(sigs: DataFrame, p: Dedup.MinHashParams): DataFrame =
+    sigs.select(col("doc_id"),
+      posexplode(Dedup.bandHashes(col("sig"), p)).as(Seq("band_idx", "band_hash")))
+
+  /** Join-form band candidates of a (doc_id, sig) frame. */
+  private def bandCandidates(sigs: DataFrame, p: Dedup.MinHashParams): DataFrame =
+    cappedBucketPairs(bands(sigs, p), p.maxBucketSize)
+
   /** The join-based SPEC of the MinHash pairs over a (doc_id, sig)
     * frame: capped band candidates, then both signature joins. */
   private def joinSpec(sigs: DataFrame, p: Dedup.MinHashParams): Set[(Long, Long, Long)] =
-    pairSet(Dedup.verifyPairs(Dedup.bandCandidates(sigs, p), sigs, p))
+    pairSet(Dedup.verifyPairs(bandCandidates(sigs, p), sigs, p))
+
+  /** The plain candidates `Dedup.bucketPairs(exploded).distinct()` ==
+    * the join SPEC, at shuffle widths 1 and 7; returns the candidate set. */
+  private def assertCandidatesEqualSpec(exploded: => DataFrame,
+      cap: Int): Set[(Long, Long)] =
+    atWidths1And7 {
+      def set(df: DataFrame) = {
+        val rows = df.collect().map(r => (r.getLong(0), r.getLong(1)))
+        assert(rows.length == rows.toSet.size, "duplicate pair rows")
+        rows.toSet
+      }
+      val got = set(Dedup.bucketPairs(exploded, cap).distinct())
+      val spec = set(cappedBucketPairs(exploded, cap))
+      assert(got == spec, s"cap=$cap\nonly new: ${got -- spec}\nonly spec: ${spec -- got}")
+      got
+    }
+
+  /** An exploded frame from (doc_id, band_idx, band_hash) rows with the
+    * given band_hash type (NULL doc ids allowed). */
+  private def explodedRows(hashType: org.apache.spark.sql.types.DataType,
+      rows: Seq[(java.lang.Long, Int, Any)]): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    spark.createDataFrame(rows.map { case (d, i, h) => Row(d, i, h) }.asJava, StructType(Seq(
+      StructField("doc_id", LongType), StructField("band_idx", IntegerType),
+      StructField("band_hash", hashType, nullable = false))))
+  }
 
   /** minhashPairs(corpus) == the join SPEC over sigFrame(corpus), at
     * shuffle widths 1 and 7; returns the pair set. */
@@ -222,6 +282,11 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
         Seq(300L -> (1 to 30).map(i => s"noise$i").mkString(" ")): _*)
     val got = assertMinhashPairsEqualSpec(corpus, p)
     val pairs = got.map(t => (t._1, t._2))
+    // the plain candidates of the same buckets hold every verified pair
+    val cand = assertCandidatesEqualSpec(
+      bands(Dedup.sigFrame(corpus, p, "doc_id", "text"), p), p.maxBucketSize)
+    assert(pairs.subsetOf(cand))
+    assert(!cand((102L, 103L)))
     // B is over cap in every band: star to its min only
     assert((102L to 109L).forall(i => pairs((101L, i))))
     assert(!pairs((102L, 103L)))
@@ -278,6 +343,33 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("bucket-local minhashPairs == join SPEC: empty corpus and a single doc") {
     assert(assertMinhashPairsEqualSpec(docs(), Dedup.MinHashParams()).isEmpty)
     assert(assertMinhashPairsEqualSpec(docs(1L -> "one lonely doc"), Dedup.MinHashParams(minMatches = 0)).isEmpty)
+    assert(assertCandidatesEqualSpec(
+      explodedRows(org.apache.spark.sql.types.StringType, Nil), 64).isEmpty)
+  }
+
+  test("bucket-local plain candidates == join SPEC: cosine-shaped int keys over several bands") {
+    import org.apache.spark.sql.types.IntegerType
+    val rnd = new scala.util.Random(67)
+    // 6 bands of 2-bit keys over 40 vectors: buckets of ~3-20 members,
+    // some over the cap of 8; plus a NULL id in every band
+    val rows = for (band <- 0 until 6; d <- (1L to 40L).map(java.lang.Long.valueOf) :+ null)
+      yield (d, band, rnd.nextInt(4): Any)
+    for (cap <- Seq(3, 8, 64)) {
+      val got = assertCandidatesEqualSpec(explodedRows(IntegerType, rows), cap)
+      assert(got.nonEmpty, s"cap=$cap")
+    }
+  }
+
+  test("bucket-local plain candidates == join SPEC: semantic-shaped one band, one cluster over cap") {
+    import org.apache.spark.sql.types.LongType
+    // band_idx 0, band_hash = list id: list 1 has 40 members (over the
+    // cap of 16), list 2 exactly 16, list 3 four, list 4 one
+    val lists = Seq(1L -> (1L to 40L), 2L -> (41L to 56L), 3L -> (57L to 60L), 4L -> Seq(61L))
+    val rows = for ((list, ids) <- lists; d <- ids) yield (java.lang.Long.valueOf(d), 0, list: Any)
+    val got = assertCandidatesEqualSpec(explodedRows(LongType, rows), 16)
+    assert(got == (2L to 40L).map(1L -> _).toSet ++
+      (for (i <- 41L to 56L; j <- i + 1 to 56L) yield (i, j)) ++
+      (for (i <- 57L to 60L; j <- i + 1 to 60L) yield (i, j)))
   }
 
   test("minhashPairs is lazy: no job at construction, no cache or join, two exchanges") {
@@ -296,19 +388,28 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     ListenerBusDrain.drain(sc)
     sc.addSparkListener(listener)
-    val (pairs, plan) =
+    // the plain-candidate form over a plain DataFrame, as jaccard,
+    // cosine and semantic dedup build it
+    val ex = spark.range(200).select(col("id").as("doc_id"),
+      (col("id") % 3).cast("int").as("band_idx"), (col("id") % 7).as("band_hash"))
+    val (pairs, plan, cand, candPlan) =
       try {
         val df = Dedup.minhashPairs(corpus)
         val pl = df.queryExecution.executedPlan
+        val c = Dedup.bucketPairs(ex, 8).distinct()
+        val cpl = c.queryExecution.executedPlan
         ListenerBusDrain.drain(sc)
-        (df, pl)
+        (df, pl, c, cpl)
       } finally sc.removeSparkListener(listener)
-    assert(jobs.get == 0, "building minhashPairs submitted Spark jobs")
+    assert(jobs.get == 0, "building minhashPairs or the plain candidates submitted Spark jobs")
     val helper = new AdaptiveSparkPlanHelper {}
-    assert(helper.collect(plan) { case s: InMemoryTableScanExec => s }.isEmpty, plan)
-    assert(helper.collect(plan) { case j: BaseJoinExec => j }.isEmpty, plan)
+    for (pl <- Seq(plan, candPlan)) {
+      assert(helper.collect(pl) { case s: InMemoryTableScanExec => s }.isEmpty, pl)
+      assert(helper.collect(pl) { case j: BaseJoinExec => j }.isEmpty, pl)
+    }
     assert(helper.collect(plan) { case e: ShuffleExchangeLike => e }.size == 2, plan)
     assert(pairs.count() > 0)
+    assert(cand.count() > 0)
   }
 
   test("null text: shingles/fingerprint treat NULL as empty string") {

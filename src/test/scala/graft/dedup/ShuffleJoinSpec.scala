@@ -102,4 +102,29 @@ class ShuffleJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(b == s)
     spark.catalog.clearCache()
   }
+
+  test("semantic dedup identical via broadcast and shuffle joins") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(17)
+    // 3 tight axis clusters of 20; a cluster cap of 8 sends the bigger
+    // centroid lists through the star rule
+    val emb = (0L until 60L).map { i =>
+      val axis = (i % 3).toInt * 2
+      i -> (0 until 8).map(d =>
+        (if (d == axis) 0.8f else 0.0f) + rnd.nextFloat() * 0.01f)
+    }.toDF("vec_id", "embedding")
+    def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.collect().map(_.mkString("|")).toSet
+    def run() = rows(graft.similarity.Similarity.semanticDedup(emb, nlist = 4, maxClusterSize = 8))
+    val b = run()
+    val s = withBroadcastDisabled {
+      spark.catalog.clearCache()
+      run()
+    }
+    assert(b.size == 60)
+    // every cluster collapses to fewer canonicals than members
+    assert(b.count(_.endsWith("|1")) < 60)
+    assert(b == s)
+    spark.catalog.clearCache()
+  }
 }
