@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -26,25 +25,8 @@ object Bench {
     // in the JSON (round-2 ADVICE).
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The generated-code cache defaults to 100 entries; this suite
-      // compiles ~1,500 distinct codegen units (224 queries x several
-      // WholeStageCodegen/aggregate/ordering units each), so at the
-      // default every pass evicts everything and every execution pays
-      // Janino recompilation ON THE DRIVER THREAD — measured as the
-      // single-core-pegged profile of the round-17 driver bench that
-      // hit its timeout (rc=124). A 4,096-entry cache holds the whole
-      // suite; any long-lived production driver serving a repeated
-      // query mix wants the same setting (guide §1.2.3: configuration
-      // fixing a measured stability/overhead problem, not an
-      // algorithm). Static conf — must be set before the first
-      // session is created.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
+    // Session.local sizes the codegen cache for this suite (see its doc)
+    val spark = Session.local(cpus.toInt, "graft-bench")
     // ERROR, not WARN (round-18): per-execution WARNs (WindowExec's
     // single-partition notice fires on every bounded-frame global
     // window — thousands of lines over ~2,200 executions) flood the

@@ -2,11 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared timing helpers for the diagnostic mains (SimIndexBench,
-  * DedupIndexBench, ScaleCheck, LayoutBench) — ONE definition of the
-  * measurement discipline so the round-8 ADVICE fix (cache drops
-  * happen BETWEEN timed runs, never inside the measured region)
-  * applies everywhere at once instead of per-file. */
+/** Timing helpers for [[ScaleCheck]]'s sf0.1 → sf1 rows — the
+  * measurement discipline of the round-8 ADVICE fix (cache drops
+  * happen BETWEEN timed runs, never inside the measured region). */
 object BenchUtil {
   def timed(f: => Unit): Double = {
     val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints the formatted physical plan of the named declared queries
   * (all of them by default) — the review loop for shuffle/broadcast/
   * pushdown shape. Usage:
@@ -12,16 +10,7 @@ object PlanAudit {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the same codegen-cache sizing as Bench and Verify, so the
-      // audited plans are the ones benchmarked and verified
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus.toInt, "graft-plan-audit")
     names.foreach { n =>
       println(s"\n========== $n ==========")
       try println(SparkEntry.queries(n)(spark, sfDir).queryExecution.explainString(

@@ -3048,9 +3048,9 @@ object SparkEntry {
       // curve / element width / key column come from the table's
       // layout-descriptor sidecar (round-9 verdict Missing #1) — the
       // only query-site literals left are the box values.
-      // maxRanges 16: LayoutBench measured identical row-group skip to
-      // the exact 58-range decomposition at a third of the Or'd-
-      // predicate evaluation cost (BASELINE.md) — wider ranges only
+      // maxRanges 16: identical row-group skip to the exact 58-range
+      // decomposition at a third of the Or'd-predicate evaluation cost
+      // (BASELINE.md's engine-measured proxies) — wider ranges only
       // admit false positives the exact predicates drop
       val layout = Layout.openIndexed(path)
       s.read.parquet(path)
@@ -3063,7 +3063,7 @@ object SparkEntry {
     // pruning beats per-dimension footer stats — a row group is a
     // compact 4-D cell whose per-dimension bounding box intersects far
     // more query boxes than its actual curve interval does (corner
-    // effects grow with dimensionality; LayoutBench measures the gap).
+    // effects grow with dimensionality; BASELINE.md's proxies row has the gap).
     // 16-bit grid per dimension (4 x 16 = the 64-bit key); quantity's
     // integral doubles cast exactly. The box sits inside the sf0.01
     // key domain (partkey < 2000, suppkey < 100) so the driver's

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.concurrent.TrieMap
 
@@ -20,19 +19,11 @@ object StageProfile {
     val names = if (args.length > 1) args.tail.toSeq
       else Seq("q_graph_lp")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    var b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match Bench's codegen-cache sizing so profiles see the same
-      // driver-side overhead the bench pays
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
     // ad-hoc conf A/B: SPARK_GRAFT_CONF="k=v,k=v"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); b = b.config(k, v) })
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val conf = sys.env.get("SPARK_GRAFT_CONF").toSeq
+      .flatMap(_.split(",").filter(_.contains("=")))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }.toMap
+    val spark = Session.local(cpus.toInt, "graft-stage-profile", conf)
     // SPARK_GRAFT_FINALPLAN=1: print the executed (AQE-final) plan of
     // the profiled run — the initial explain hides runtime rewrites
     val finalPlan = sys.env.get("SPARK_GRAFT_FINALPLAN").exists(_ == "1")

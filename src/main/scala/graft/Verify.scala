@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,16 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // see Bench: the suite's codegen units far exceed the 100-entry
-      // default; recompilation is pure driver-side overhead
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus.toInt, "graft-verify")
     new java.io.File(outDir).mkdirs()
     // same isolation hook as Bench: SPARK_GRAFT_ONLY=q_a,q_b dumps just
     // those queries (local spot-verification of a changed operator)

@@ -210,8 +210,7 @@ object Dedup {
     * assumed unique, as everywhere in this object. */
   def minhashPairs(docs: DataFrame, p: MinHashParams = MinHashParams(),
       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    bucketVerifiedPairs(
-      docs.select(col(idCol).as("doc_id"), minhashSignature(col(textCol), p).as("sig")), p)
+    bucketVerifiedPairs(sigFrame(docs, p, idCol, textCol), p)
 
   /** The MinHash pair pipeline over a (doc_id, sig) frame: the band
     * explode carries each doc's signature, [[bucketPairs]] pairs it
@@ -290,19 +289,17 @@ object Dedup {
     else narrow
   }
 
-  /** The persisted (doc_id, sig) projection of [[jaccardPairs]] and
-    * [[writeSimilarityGraph]] (whose index write and edge pass both
-    * read it); [[minhashPairs]] reads signatures once and does not
-    * persist them. */
+  /** The lazy (doc_id, sig) projection behind [[minhashPairs]],
+    * [[jaccardPairs]] and [[writeSimilarityGraph]]. Not persisted: the
+    * first two read it once; [[writeSimilarityGraph]], whose index write
+    * and edge pass both read it, persists its own copy. */
   private[graft] def sigFrame(docs: DataFrame, p: MinHashParams,
       idCol: String, textCol: String): DataFrame =
     // no widen here: the one-pass minhash is ~100-150 ms serial at
     // bench scale, below widen's own planning cost (measured; widen
     // stays on the Gram build and the semantic-dedup quantize, whose
     // serial cost is ~10x)
-    docs
-      .select(col(idCol).as("doc_id"), minhashSignature(col(textCol), p).as("sig"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    docs.select(col(idCol).as("doc_id"), minhashSignature(col(textCol), p).as("sig"))
 
   /** The signature-verify tail of the similarity-graph append and
     * delete verbs: candidate (doc_a, doc_b) pairs scored by component
@@ -341,7 +338,7 @@ object Dedup {
   def writeSimilarityGraph(docs: DataFrame, path: String,
       p: MinHashParams = MinHashParams(),
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    val sigs = sigFrame(docs, p, idCol, textCol)
+    val sigs = sigFrame(docs, p, idCol, textCol).persist(StorageLevel.MEMORY_AND_DISK)
     try {
       writeIndexFromSigs(sigs, s"$path/index", p, "overwrite")
       bucketVerifiedPairs(sigs, p)
@@ -642,7 +639,7 @@ object Dedup {
     * sig. Deletion cost therefore tracks THE INDEX (~0.4 KB/doc
     * narrow columns) plus the edge rewrite — never the corpus text —
     * and production batches takedowns the way it batches ingest
-    * (DedupIndexBench's delete rows measure cost vs deleted-set size).
+    * (BASELINE.md's deletion-cost row measures cost vs deleted-set size).
     *
     * CRASH/REPLAY: two directory swaps — edges first, then the whole
     * index ([[graft.core.DirSwap]] each). Re-running the SAME delete
@@ -1754,8 +1751,8 @@ object Dedup {
     * (map-side projection); everything batch-sized (affected ids,
     * super-edges, remap) rides broadcasts, bounded by the micro-batch
     * ingest contract like the merge-table broadcasts. Per-batch cost
-    * tracks the BATCH, not the stored graph (DedupIndexBench's
-    * labels_refresh rows).
+    * tracks the BATCH, not the stored graph (BASELINE.md's
+    * component-labels refresh row).
     *
     * Output: (id, lbl) for every node in some old OR new pair. */
   def appendComponents(labels: DataFrame, newEdges: DataFrame,
@@ -2046,8 +2043,8 @@ object Dedup {
     * begins the full fixpoint distance away, and each round contracts
     * by d, so warm saves ln(coldDist/perturbation)/ln(1/d) ≈
     * 6.2·ln(graph/batch ratio) rounds — the smaller the batch
-    * relative to the graph, the bigger the saving (measured in
-    * DedupIndexBench at a 1%-batch append, the production
+    * relative to the graph, the bigger the saving (BASELINE.md's
+    * rank-sidecar row, measured at a 1%-batch append, the production
     * per-micro-batch shape). The tolerance-band contract is
     * therefore the [[graft.graph.GraphRank.pageRankConverged]] serve
     * convention, NOT the exact labels/tri gate: consumers read scores
@@ -2076,8 +2073,8 @@ object Dedup {
     * schedule is ln(d·k·scale/tol)/ln(1/d) ≈ 6.2·ln(850·k) rounds —
     * inside [[RankSidecarMaxIters]] for hubs to k ≈ 10⁴ (a tighter
     * tol mostly buys capped-out rounds instead of precision;
-    * DedupIndexBench's first rank rows measured exactly that at
-    * tol = 10⁶). */
+    * BASELINE.md's rank-sidecar row records exactly that for its
+    * first cut at tol = 10⁶). */
   val RankSidecarTol: Long = 1000000000L
 
   /** Default round cap for the rank sidecar (see [[RankSidecarTol]]

@@ -193,8 +193,8 @@ object GraphRank {
     * is already near the new graph's fixpoint — the growing-artifact
     * refresh case, where one appended batch perturbs ranks locally —
     * stops in a handful of rounds where a cold start pays the full
-    * log(scale/tol)/log(dDen/dNum) schedule (measured in
-    * DedupIndexBench's rank-sidecar rows). Unlike the exact sidecars
+    * log(scale/tol)/log(dDen/dNum) schedule (BASELINE.md's
+    * rank-sidecar warm-start row). Unlike the exact sidecars
     * (labels, tri) the warm TRAJECTORY differs from the cold one, so
     * results agree with [[pageRankConverged]] only up to the
     * tolerance band (RankSidecarSpec pins the measured band on fixed

@@ -26,7 +26,8 @@ import graft.functions.Curves
   *
   * [[rowGroupRanges]] / [[countSkippable]] read parquet footers
   * directly (driver-side diagnostic, not a query path) to make the
-  * skip ratio measurable — see graft.LayoutBench and BASELINE.md.
+  * skip ratio measurable — see BASELINE.md's engine-measured proxies
+  * (measured by `graft.LayoutBench`, in git at 1530f39).
   */
 object Layout {
 

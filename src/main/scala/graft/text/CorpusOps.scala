@@ -489,9 +489,9 @@ object CorpusOps {
     * word's pair-multiset delta to the map/index. Per-round cost is
     * O(affected words · len) + O(log heap) per touched pair instead
     * of O(all words · len): training 10k+ merges over a 100k+-word
-    * table runs in seconds (`BpeTrainSpec`'s shipped-scale case and
-    * the `BpeTrainScaleCheck` main gate this; the 12-merge oracles
-    * gate the semantics). */
+    * table runs in seconds (`BpeTrainSpec`'s shipped-scale case gates
+    * this; BASELINE.md's tokenizer-trainer scale row has the timings;
+    * the 12-merge oracles gate the semantics). */
   private[graft] def trainMerges(words0: Array[(String, Long, Array[String])],
       merges: Int): (Array[(Long, String, String, Long)],
         Array[(String, Long, Array[String])]) = {

@@ -1,8 +1,7 @@
 package graft.dedup
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Incremental component maintenance (round-15 verdict #1):
@@ -13,16 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * a growing similarity graph identical to a from-scratch build,
   * including the cap-crossing retraction case where the refresh must
   * detect the deletion and rebuild instead of merging. */
-class ComponentsAppendSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-components-append-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ComponentsAppendSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString + "/g"

@@ -2,24 +2,15 @@ package graft.dedup
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.text.TextFunctions
 
-class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-dedup-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class DedupSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def docs(rows: (Long, String)*) = {
     import spark.implicits._
@@ -139,6 +130,20 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     val uncapped = Dedup.jaccardPairs(docs(many: _*),
       Dedup.JaccardParams.copy(maxBucketSize = 100))
     assert(uncapped.count() == 70L * 69 / 2)
+  }
+
+  test("jaccard pairs cache only the candidate frame; the similarity graph frees its signatures") {
+    // the signatures feed one band explode, under the cached candidate
+    // frame, so caching them too would hold memory nobody reads again
+    val corpus = docs((1L, "a b c d e f g h"), (2L, "a b c d e f g h z"), (3L, "p q r s t u"))
+    spark.catalog.clearCache()
+    Dedup.jaccardPairs(corpus)
+    assert(spark.sparkContext.getPersistentRDDs.size == 1)
+    spark.catalog.clearCache()
+    val path = java.nio.file.Files.createTempDirectory("graft_sig_cache_spec").toString + "/g"
+    Dedup.writeSimilarityGraph(corpus, path)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    assert(Dedup.readSimilarityGraph(spark, path).count() == 1L)
   }
 
   test("minhash pairs: over-cap clusters stay connected via the star rule") {

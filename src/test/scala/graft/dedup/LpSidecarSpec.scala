@@ -1,8 +1,7 @@
 package graft.dedup
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.LabelProp
@@ -24,16 +23,7 @@ import graft.graph.LabelProp
   *  - a cap-crossing retraction needs no fallback — the stop test is
   *    against the current (post-retraction) edges.
   */
-class LpSidecarSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-lp-sidecar-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class LpSidecarSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString + "/g"

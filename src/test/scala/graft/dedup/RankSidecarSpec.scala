@@ -1,8 +1,7 @@
 package graft.dedup
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.GraphRank
@@ -32,16 +31,7 @@ import graft.graph.GraphRank
   *    vector is only an initial guess, so the refresh stays in-band
   *    against a cold solve of the current (post-retraction) edges.
   */
-class RankSidecarSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-rank-sidecar-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class RankSidecarSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString + "/g"

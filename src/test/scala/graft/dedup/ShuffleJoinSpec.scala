@@ -1,7 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** At test scale every join in the pipelines is broadcast; on a
@@ -10,16 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * results through the sort-merge/shuffle-hash path — the plan shape
   * they would take at 100 TB.
   */
-class ShuffleJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-shuffle-join-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ShuffleJoinSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def corpus() = {
     import spark.implicits._

@@ -1,8 +1,7 @@
 package graft.dedup
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The DELETE verb of the similarity-graph lifecycle (round-16 verdict
@@ -16,16 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * star must re-point at the surviving min). The oracle side of the
   * gated queries is the plain from-scratch build over survivors — the
   * oracle never sees the deletion path. */
-class SimGraphDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-simgraph-delete-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SimGraphDeleteSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString + "/g"

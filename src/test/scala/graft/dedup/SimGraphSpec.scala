@@ -1,8 +1,7 @@
 package graft.dedup
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The similarity-graph artifact lifecycle (round-14 verdict #2):
@@ -12,16 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * bucket's stored all-pairs edges into star edges and therefore
   * requires the append to RETRACT stored pairs that lose their last
   * candidate support. A tiny maxBucketSize plants exactly that. */
-class SimGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-simgraph-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SimGraphSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString + "/g"

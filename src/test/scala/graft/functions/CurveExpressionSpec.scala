@@ -1,30 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
-object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // fail loudly if our doGenCode emits Java that Janino can't compile,
-      // instead of silently falling back to interpreted eval
-      .config("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-}
+class CurveExpressionSpec extends AnyFunSuite with LocalSparkSuite {
 
-class CurveExpressionSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkTestSession.spark
+  // fail loudly if our doGenCode emits Java that Janino can't compile,
+  // instead of silently falling back to interpreted eval
+  override protected def sessionConf: Map[String, String] = Map(
+    "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+    "spark.sql.extensions" -> classOf[GraftExtensions].getName)
 
   test("SQL hilbert/morton encode + decode reproduce the reference 5x5 grid golden") {
     val rows = spark.sql(
@@ -292,6 +278,4 @@ class CurveExpressionSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(bad.isEmpty, bad.mkString("\n"))
   }
-
-  override def afterAll(): Unit = { /* shared session left for other suites */ }
 }

@@ -1,23 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The SparkSessionExtensions injection path — what a user configures
   * via `spark.sql.extensions=graft.functions.GraftExtensions` — must
   * expose the same SQL functions as Curves.register. */
-class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ExtensionsSpec extends AnyFunSuite with LocalSparkSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-extensions-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new GraftExtensions)
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def sessionConf: Map[String, String] = Map(
+    "spark.sql.extensions" -> classOf[GraftExtensions].getName)
 
   test("injected functions resolve through the SQL parser") {
     val r = spark.sql(

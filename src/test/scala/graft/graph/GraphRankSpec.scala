@@ -1,7 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Behavioral contracts of the integer PageRank that the oracle's
@@ -9,16 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * base rank, regular graphs are exact fixed points, hubs outrank
   * leaves, and edge orientation doesn't matter.
   */
-class GraphRankSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-graphrank-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class GraphRankSpec extends AnyFunSuite with LocalSparkSuite {
 
   private val Scale = 1000000000000L
   private val Base = Scale * 15 / 100

@@ -1,7 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Contracts of deterministic synchronous label propagation: the
@@ -11,16 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * driver-side reference sweep on a pseudo-random graph, and
   * robustness to duplicated / reversed input pairs.
   */
-class LabelPropSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-labelprop-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class LabelPropSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def run(nodeIds: Seq[Long], es: Seq[(Long, Long)],
       iters: Int = 4): Map[Long, Long] = {

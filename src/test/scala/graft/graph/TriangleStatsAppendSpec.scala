@@ -1,8 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.Dedup
@@ -17,16 +16,7 @@ import graft.dedup.Dedup
   * including the cap-crossing retraction case where the refresh must
   * detect the deletion (a retracted edge can REMOVE baked triangles)
   * and rebuild instead of merging. */
-class TriangleStatsAppendSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tri-stats-append-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TriangleStatsAppendSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString + "/g"

@@ -1,8 +1,7 @@
 package graft.graph
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Contracts of the degree-oriented triangle counter: known closed
@@ -10,16 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * 3-way join on random graphs (the oracle's formulation), and
   * robustness to duplicate / reversed input pairs.
   */
-class TrianglesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-triangles-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TrianglesSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def pairs(es: (Long, Long)*) = {
     import spark.implicits._

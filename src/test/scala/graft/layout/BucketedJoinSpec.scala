@@ -2,11 +2,10 @@ package graft.layout
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Bucketed tables pre-pay the join shuffle at write time: two tables
@@ -15,21 +14,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * ShuffleExchange nodes with broadcast disabled) and that the result
   * equals the plain unbucketed join.
   */
-class BucketedJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BucketedJoinSpec extends AnyFunSuite with LocalSparkSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-bucketed-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      Files.createTempDirectory("graft-wh").toString)
-    // static plans: under AQE, executed shuffles hide inside leaf
-    // QueryStageExec nodes and the plan.collect below would miss them
-    .config("spark.sql.adaptive.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  // static plans: under AQE, executed shuffles hide inside leaf
+  // QueryStageExec nodes and the plan.collect below would miss them
+  override protected def sessionConf: Map[String, String] = Map(
+    "spark.sql.warehouse.dir" -> Files.createTempDirectory("graft-wh").toString,
+    "spark.sql.adaptive.enabled" -> "false")
 
   private def shuffleCount(df: org.apache.spark.sql.DataFrame): Int =
     df.queryExecution.executedPlan match {

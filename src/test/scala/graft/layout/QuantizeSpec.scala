@@ -1,8 +1,7 @@
 package graft.layout
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
 
@@ -14,16 +13,7 @@ import scala.util.Random
   *     ([[Quantize.grid]]) and the driver mirror ([[Quantize.cell]]),
   *     so the ranges built from query corners match the stored cells.
   */
-class QuantizeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-quantize-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class QuantizeSpec extends AnyFunSuite with LocalSparkSuite {
 
   test("monotone + box containment over random domains, bits, and boxes") {
     val rnd = new Random(13)

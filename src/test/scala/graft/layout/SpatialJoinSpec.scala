@@ -1,8 +1,7 @@
 package graft.layout
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Geometric contracts of the curve-cell spatial join: corner probes
@@ -10,18 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * completeness argument, exercised), results equal the plain
   * inequality join, and the cell-width precondition is enforced.
   */
-class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-spatialjoin-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = {
-    spark.stop()
-  }
+class SpatialJoinSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def pts(rows: (Long, Int, Int)*) = {
     import spark.implicits._

@@ -1,8 +1,7 @@
 package graft.layout
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The versioned table's contracts:
@@ -15,16 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *     unreferenced (old segments, crash debris) is physically gone,
   *     vacuumed versions fail loudly.
   */
-class VersionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-vtable-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class VersionedTableSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def freshPath(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft_vt_$tag").toString + "/t"

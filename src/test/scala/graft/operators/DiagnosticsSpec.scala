@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkEntry
@@ -12,16 +11,7 @@ import graft.SparkEntry
   * must rank by exact counts with a flat-profile identity, and the
   * snapshot diff classes must partition the id universe.
   */
-class DiagnosticsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-diagnostics-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class DiagnosticsSpec extends AnyFunSuite with LocalSparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
 

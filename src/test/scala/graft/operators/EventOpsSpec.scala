@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkEntry
@@ -12,16 +11,7 @@ import graft.SparkEntry
   * must chain gaplessly per user, grouping-set flags must mirror the
   * set structure, and quality deciles must be balanced buckets.
   */
-class EventOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-eventops-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class EventOpsSpec extends AnyFunSuite with LocalSparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
 

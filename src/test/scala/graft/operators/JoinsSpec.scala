@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SaltedJoin's correctness contract (salted == unsalted row for row)
@@ -10,16 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * join shuffles on (key, salt), not key alone, so a hot key's rows
   * spread over `salts` reducers.
   */
-class JoinsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-joins-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class JoinsSpec extends AnyFunSuite with LocalSparkSuite {
 
   test("salted join == plain join on pathologically skewed keys") {
     import spark.implicits._

@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.Dedup
 import graft.text.{CorpusOps, TextFunctions}
 
-class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-pipeline-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PipelineSpec extends AnyFunSuite with LocalSparkSuite {
 
   test("end-to-end pipeline: every stage's invariant holds on real data") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")

@@ -1,20 +1,10 @@
 package graft.similarity
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
-class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-similarity-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SimilaritySpec extends AnyFunSuite with LocalSparkSuite {
 
   /** Tiny deterministic corpus: 3 clusters around orthogonal axes in
     * 8 dims + the probe near cluster 0. */

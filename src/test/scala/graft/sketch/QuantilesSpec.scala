@@ -1,8 +1,7 @@
 package graft.sketch
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
 import graft.layout.Quantize
@@ -16,16 +15,7 @@ import graft.layout.Quantize
   *  3. value bound: |est_value - exact_value| <= one cell width (up
   *     to double rounding) for in-domain data.
   */
-class QuantilesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-quantiles-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class QuantilesSpec extends AnyFunSuite with LocalSparkSuite {
 
   private val (lo, hi, bits) = (0.0, 1000.0, 10)
 

@@ -2,10 +2,10 @@ package graft.sources
 
 import java.time.{LocalDateTime, ZoneOffset}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The event-time read boundary is TYPE-PARAMETRIC (round-10 verdict
@@ -22,17 +22,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * arithmetic — deliberately NOT via [[EventTime]], so the assertion
   * is against an independent implementation of the conversion.
   */
-class EventTimeSpec extends AnyFunSuite with BeforeAndAfterAll {
+class EventTimeSpec extends AnyFunSuite with LocalSparkSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-eventtime-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def sessionConf: Map[String, String] = Map(
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
   /** Independent driver-side nanos derivation for whatever physical
     * type the current testdata carries. */

@@ -1,23 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Text-source round-trip contracts (q_source_jsonl / q_source_csv):
   * write-then-read is the IDENTITY on hostile content — embedded
   * delimiters, quotes, newlines, unicode, and the NULL-vs-empty
   * distinction — under the exact options the gated queries use. */
-class SourceSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-source-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SourceSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def hostile() = {
     import spark.implicits._

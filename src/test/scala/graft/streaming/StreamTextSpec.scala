@@ -2,8 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.text.Postings
@@ -13,16 +12,7 @@ import graft.text.Postings
   * build over the same documents, restart markers make re-delivery
   * idempotent, and compaction after the stream is a no-op logically.
   */
-class StreamTextSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-streamtext-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class StreamTextSpec extends AnyFunSuite with LocalSparkSuite {
 
   test("micro-batched postings ingest == from-scratch build, then compacts") {
     import spark.implicits._

@@ -2,9 +2,9 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Structured Streaming over the events table: the library's
@@ -14,17 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * stream into a memory sink and comparing against the identical batch
   * computation.
   */
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingSpec extends AnyFunSuite with LocalSparkSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-streaming-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def sessionConf: Map[String, String] = Map(
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
   /** The PRODUCT tumbling-window aggregation (q_events_tumbling's
     * definition): one body for batch and stream — the stream==batch

@@ -1,7 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Contracts of reciprocal-rank fusion: the fused score is exactly
@@ -9,16 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * preserves the ranker's order, and consensus beats a lone top rank
   * at the classic K=60.
   */
-class FusionSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-fusion-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class FusionSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def ranking(rows: (Long, Long)*) = {
     import spark.implicits._

@@ -1,8 +1,7 @@
 package graft.text
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Behavioral contracts of the record-linkage operator that the
@@ -10,16 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * left id, self-linkage is a perfect-score identity, and the emitted
   * Jaccard matches an independent builtin-function recount.
   */
-class LinkageSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-linkage-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class LinkageSpec extends AnyFunSuite with LocalSparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
   private def docs = spark.read.parquet(s"$dir/documents.parquet")

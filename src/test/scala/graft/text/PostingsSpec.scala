@@ -1,8 +1,7 @@
 package graft.text
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Behavioral contracts of the positional-postings phrase search:
@@ -10,16 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * repeated-token phrases), build/serve equivalence, and the pushed
   * token filter on the persisted index's scan.
   */
-class PostingsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-postings-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PostingsSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def df(rows: (Long, String)*) = {
     import spark.implicits._

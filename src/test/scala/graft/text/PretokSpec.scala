@@ -1,8 +1,7 @@
 package graft.text
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
+import graft.LocalSparkSuite
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the GPT-2-style pre-tokenization semantics
@@ -12,16 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * everywhere outside the ONE documented divergence (Unicode
   * whitespace), and the divergence itself — exactly where
   * docs/COMPAT.md §pretok says it is and nowhere else. */
-class PretokSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-pretok-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PretokSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def split(text: String): Seq[String] = {
     import spark.implicits._
