@@ -1,9 +1,18 @@
 package graft.core
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.SparkSession
 
-/** Crash-safe directory replacement for the persisted-index
-  * compactors (postings, dedup signatures, ANN buckets, sketches).
+/** The one directory protocol for persisted artifacts (sketches,
+  * count indexes, postings, signature and ANN indexes, graph edges and
+  * sidecars): every whole-directory rewrite goes through [[replace]],
+  * and the few verbs that must stage several directories before
+  * swapping any of them call [[swap]] directly.
+  *
+  * [[replace]] clears a stale `<path>_compacting` left by a crashed
+  * earlier attempt, runs the caller's write into a fresh
+  * `<path>_compacting`, then [[swap]]s it in (a single rename when no
+  * live directory exists yet).
   *
   * The naive `delete(live); rename(tmp, live)` has a window where a
   * crash leaves NO live directory at all — only the `_compacting`
@@ -26,10 +35,45 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * atomic directory exchange; serve loops that cannot tolerate it
   * should pause ingest/probes around compaction (the streaming specs
   * run compaction between batches for exactly this reason).
+  *
+  * MARKER RULE — the one place that decides which stream-ingest
+  * idempotence markers survive a swap. Before its renames, [[swap]]
+  * carries into `tmp`:
+  *  - every `_batches/<id>` file (the marker of the per-batch loops,
+  *    [[graft.streaming.AtomicIngest.once]]);
+  *  - every non-hidden child DIRECTORY of `live` that `tmp` lacks,
+  *    recreated EMPTY — a committed `batch_<id>` directory
+  *    ([[graft.streaming.AtomicIngest.commitBatch]]) or a superseded
+  *    part name is its own re-delivery marker, so a restarted stream
+  *    still skips the batch while readers find no rows in it.
+  * Files at the live root and hidden names (`_staging_*`,
+  * `_temporary`, `.`-prefixed) are not carried. Without the rule, a
+  * stream that crashed mid-batch and restarts after compaction finds
+  * no marker for its re-delivered batch and applies it a second
+  * time, breaking the append == from-scratch serve-equivalence
+  * contract. Copying (not renaming) means the live directory is never
+  * mutated before the swap. Flat artifacts, and staged verbs that
+  * restage every child directory, are unaffected by the rule.
   */
 object DirSwap {
 
+  /** Replace the directory at `path` with what `write` writes into the
+    * temp path it is given — the only whole-directory replace. */
+  def replace(spark: SparkSession, path: String)(write: String => Unit): Unit =
+    replace(new Path(path).getFileSystem(spark.sessionState.newHadoopConf()), path)(write)
+
+  private[core] def replace(fs: FileSystem, path: String)(write: String => Unit): Unit = {
+    val live = new Path(path)
+    val tmp = new Path(path + "_compacting")
+    fs.delete(tmp, true) // leftover from a previously crashed replace
+    write(tmp.toString)
+    if (fs.exists(live)) swap(fs, live, tmp)
+    else require(fs.rename(tmp, live), s"replace: could not move $tmp into $live")
+  }
+
   def swap(fs: FileSystem, live: Path, tmp: Path): Unit = {
+    preserveBatchMarkers(fs, live, tmp)
+    preserveChildDirs(fs, live, tmp)
     val old = new Path(live.toString + "_old")
     fs.delete(old, true) // leftover from a previously crashed swap
     require(fs.rename(live, old), s"swap: could not move $live aside")
@@ -39,16 +83,9 @@ object DirSwap {
     ()
   }
 
-  /** Carry the stream-ingest `_batches/<id>` idempotence markers into
-    * a freshly written compacted directory BEFORE it is swapped in —
-    * without this, a stream that crashed mid-batch and restarts after
-    * compaction finds no marker for its re-delivered batch and
-    * appends it a second time, breaking the append == from-scratch
-    * serve-equivalence contract (round-11 ADVICE). Markers are empty
-    * files, so "copy" is creation by name; a live dir without markers
-    * is a no-op. Copying (not renaming) means the live directory is
-    * never mutated before the swap. */
-  def preserveBatchMarkers(fs: FileSystem, live: Path, tmp: Path): Unit = {
+  /** `_batches/<id>` markers are empty files, so "copy" is creation by
+    * name; a live dir without markers is a no-op. */
+  private def preserveBatchMarkers(fs: FileSystem, live: Path, tmp: Path): Unit = {
     val src = new Path(live, "_batches")
     if (!fs.exists(src)) return
     val dst = new Path(tmp, "_batches")
@@ -57,4 +94,13 @@ object DirSwap {
       if (st.isFile) fs.create(new Path(dst, st.getPath.getName), true).close()
     }
   }
+
+  private def preserveChildDirs(fs: FileSystem, live: Path, tmp: Path): Unit =
+    if (fs.exists(live)) fs.listStatus(live).foreach { st =>
+      val n = st.getPath.getName
+      val carried = new Path(tmp, n)
+      if (st.isDirectory && !n.startsWith("_") && !n.startsWith(".") &&
+          !fs.exists(carried))
+        fs.mkdirs(carried)
+    }
 }

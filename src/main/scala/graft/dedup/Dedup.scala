@@ -456,16 +456,11 @@ object Dedup {
         // list — row groups without debris are skipped.
         val debris = spark.read.parquet(s"$path/edges")
           .filter(col("doc_b") > oldMax)
-        if (!debris.isEmpty) {
-          spark.read.parquet(s"$path/edges")
-            .filter(col("doc_b") <= oldMax)
-            .write.mode("overwrite").parquet(s"$path/edges_compacting")
-          val fsR = new org.apache.hadoop.fs.Path(path)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          graft.core.DirSwap.swap(fsR,
-            new org.apache.hadoop.fs.Path(s"$path/edges"),
-            new org.apache.hadoop.fs.Path(s"$path/edges_compacting"))
-        }
+        if (!debris.isEmpty)
+          graft.core.DirSwap.replace(spark, s"$path/edges")(
+            spark.read.parquet(s"$path/edges")
+              .filter(col("doc_b") <= oldMax)
+              .write.mode("overwrite").parquet(_))
 
         val nb = explodedBands(newSigs, "doc_id", p)
           .persist(StorageLevel.MEMORY_AND_DISK)
@@ -561,14 +556,9 @@ object Dedup {
             .join(retract,
               col("doc_a") === col("x") && col("doc_b") === col("y"),
               "left_anti")
-          val out = kept.unionByName(newEdges)
-          out.write.mode("overwrite").parquet(s"$path/edges_compacting")
+          graft.core.DirSwap.replace(spark, s"$path/edges")(
+            kept.unionByName(newEdges).write.mode("overwrite").parquet(_))
           affPairs.unpersist()
-          val fs = new org.apache.hadoop.fs.Path(path)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          graft.core.DirSwap.swap(fs,
-            new org.apache.hadoop.fs.Path(s"$path/edges"),
-            new org.apache.hadoop.fs.Path(s"$path/edges_compacting"))
         }
         touched.unpersist(); nb.unpersist()
         // grow the index last: edge derivation above must see the
@@ -588,13 +578,8 @@ object Dedup {
     * appends dropped). Appends compose identically before and after. */
   def compactSimilarityGraph(spark: org.apache.spark.sql.SparkSession,
       path: String, p: MinHashParams = MinHashParams()): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    spark.read.parquet(s"$path/edges")
-      .write.mode("overwrite").parquet(s"$path/edges_compacting")
-    graft.core.DirSwap.swap(fs,
-      new org.apache.hadoop.fs.Path(s"$path/edges"),
-      new org.apache.hadoop.fs.Path(s"$path/edges_compacting"))
+    graft.core.DirSwap.replace(spark, s"$path/edges")(
+      spark.read.parquet(s"$path/edges").write.mode("overwrite").parquet(_))
     compactSignatureIndex(spark, s"$path/index", p)
   }
 
@@ -785,14 +770,10 @@ object Dedup {
         graft.core.DirSwap.swap(fs,
           new org.apache.hadoop.fs.Path(s"$path/edges"),
           new org.apache.hadoop.fs.Path(s"$path/edges_compacting"))
-        if (anythingStored) {
-          graft.core.DirSwap.preserveBatchMarkers(fs,
-            new org.apache.hadoop.fs.Path(idx),
-            new org.apache.hadoop.fs.Path(s"$idx-compacting"))
+        if (anythingStored)
           graft.core.DirSwap.swap(fs,
             new org.apache.hadoop.fs.Path(idx),
             new org.apache.hadoop.fs.Path(s"$idx-compacting"))
-        }
         Seq(delSigs, survivors, touched, survTouched, oldStats, newStats)
           .foreach(_.unpersist())
 
@@ -852,9 +833,6 @@ object Dedup {
           .persist(StorageLevel.MEMORY_AND_DISK)
         stageIndexSurvivors(spark, path, s"$path-compacting",
           survivors, touched, survTouched, newStats, p)
-        graft.core.DirSwap.preserveBatchMarkers(fs,
-          new org.apache.hadoop.fs.Path(path),
-          new org.apache.hadoop.fs.Path(s"$path-compacting"))
         graft.core.DirSwap.swap(fs,
           new org.apache.hadoop.fs.Path(path),
           new org.apache.hadoop.fs.Path(s"$path-compacting"))
@@ -1936,17 +1914,12 @@ object Dedup {
       path: String, name: String, assign: DataFrame,
       wm: Long, nEdges: Long, roundsRan: Long, converged: Boolean): Unit = {
     import spark.implicits._
-    assign.write.mode("overwrite").parquet(s"$path/${name}_compacting/assign")
-    Seq((wm, nEdges, roundsRan, converged))
-      .toDF("watermark", "n_edges", "rounds_ran", "converged")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/${name}_compacting/meta")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(s"$path/$name")
-    val staged = new org.apache.hadoop.fs.Path(s"$path/${name}_compacting")
-    if (fs.exists(live)) graft.core.DirSwap.swap(fs, live, staged)
-    else require(fs.rename(staged, live),
-      s"writeSidecarDir($name): could not move $staged into place")
+    graft.core.DirSwap.replace(spark, s"$path/$name") { tmp =>
+      assign.write.mode("overwrite").parquet(s"$tmp/assign")
+      Seq((wm, nEdges, roundsRan, converged))
+        .toDF("watermark", "n_edges", "rounds_ran", "converged")
+        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
+    }
   }
 
   /** Build the TRIANGLE-STATS sidecar of a [[writeSimilarityGraph]]

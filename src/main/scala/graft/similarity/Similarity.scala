@@ -1473,18 +1473,23 @@ object Similarity {
     * [[embDominantDirection]], bit-for-bit. */
   def directionFromGram(spark: org.apache.spark.sql.SparkSession,
       path: String, iters: Int = 3): DataFrame = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    // recursiveFileLookup: flat build/append files plus per-batch
-    // subdirectories committed atomically by the streaming ingest
     // eagerCache + ONE partition (round-18, see embDominantDirection):
     // the power iteration references the d²-bounded merged Gram every
     // round — fill once, as a single partition, before the loop plans
-    val g = graft.dedup.Dedup.eagerCache(
-      spark.read.option("recursiveFileLookup", "true").parquet(path)
-        .groupBy(col("i"), col("j"))
-        .agg(sum(col("gij")).cast(dec).as("gij"))
-        .repartition(1))
+    val g = graft.dedup.Dedup.eagerCache(gramMerged(spark, path).repartition(1))
     powerIterate(g, iters)
+  }
+
+  /** The Gram merge law, shared by serve and compaction: exact Decimal
+    * sum per (i, j) cell, zero cells kept. recursiveFileLookup: flat
+    * build/append files plus per-batch subdirectories committed
+    * atomically by the streaming ingest. */
+  private def gramMerged(spark: org.apache.spark.sql.SparkSession,
+      path: String): DataFrame = {
+    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
+    spark.read.option("recursiveFileLookup", "true").parquet(path)
+      .groupBy(col("i"), col("j"))
+      .agg(sum(col("gij")).cast(dec).as("gij"))
   }
 
   /** DELETE vectors from a persisted index by filtering the given
@@ -1571,9 +1576,10 @@ object Similarity {
     * kept (unlike the count compactors a Gram cell is legitimately
     * zero or negative: entries are sums of signed quantized products,
     * and a from-scratch build emits every d² cell) — and swap the
-    * directory in crash-safely. Stream idempotence survives: the
-    * streamed batches' `batch_<id>` data directories are recreated
-    * EMPTY in the compacted root, so [[graft.streaming.AtomicIngest]]'s
+    * directory in crash-safely. Stream idempotence survives:
+    * [[graft.core.DirSwap]]'s marker rule recreates the streamed
+    * batches' `batch_<id>` data directories EMPTY in the compacted
+    * root, so [[graft.streaming.AtomicIngest]]'s
     * re-delivery check (`exists(batch_<id>)`) still skips re-delivered
     * batches while the recursive read finds no rows in them. After
     * compaction the artifact content equals a from-scratch
@@ -1585,26 +1591,9 @@ object Similarity {
     * in-flight staging commit racing the swap loses its staging dir
     * and crash-retries — the documented pause contract). */
   def compactGram(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val batchDirs = fs.listStatus(root).toSeq
-      .filter { st =>
-        val n = st.getPath.getName
-        st.isDirectory && !n.startsWith("_") && !n.startsWith(".")
-      }
-      .map(_.getPath.getName)
-    val tmp = path + "_compacting"
-    val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-    fs.delete(tmpPath, true)
-    spark.read.option("recursiveFileLookup", "true").parquet(path)
-      .groupBy(col("i"), col("j"))
-      .agg(sum(col("gij")).cast(dec).as("gij"))
-      .write.mode("overwrite").parquet(tmp)
-    batchDirs.foreach(n => fs.mkdirs(new org.apache.hadoop.fs.Path(tmpPath, n)))
-    graft.core.DirSwap.swap(fs, root, tmpPath)
-  }
+      path: String): Unit =
+    graft.core.DirSwap.replace(spark, path)(
+      gramMerged(spark, path).write.mode("overwrite").parquet(_))
 
   /** Compact a grown ANN bucket index: re-cluster the keys table by
     * (band_idx, key) and rewrite the vectors table, so probes prune

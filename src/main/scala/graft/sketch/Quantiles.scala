@@ -119,10 +119,19 @@ object Quantiles {
     * stream markers preserved. */
   def compactGridHistogram(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit =
-    graft.text.CorpusOps.replaceDir(spark, path,
-      spark.read.option("recursiveFileLookup", "true").parquet(path)
-        .groupBy(col("stratum"), col("cell")).agg(sum(col("cnt")).as("cnt"))
-        .filter(col("cnt") =!= 0L))
+    // a sketch is KBs at any corpus size — one output file IS the point
+    graft.core.DirSwap.replace(spark, path)(
+      histogramMerged(spark, path).coalesce(1).write.mode("overwrite").parquet(_))
+
+  /** The grid-histogram merge law, shared by serve and compaction: sum
+    * per (stratum, cell), zero-netted cells dropped. recursiveFileLookup:
+    * flat build/append/delete files plus any per-batch dirs an ingest
+    * loop commits (the CMS convention). */
+  private def histogramMerged(spark: org.apache.spark.sql.SparkSession,
+      path: String): DataFrame =
+    spark.read.option("recursiveFileLookup", "true").parquet(path)
+      .groupBy(col("stratum"), col("cell")).agg(sum(col("cnt")).as("cnt"))
+      .filter(col("cnt") =!= 0L)
 
   /** Serve quantiles from a persisted grid histogram: sum-merge the
     * stored partials (sketch-sized), then the same estimate + exact
@@ -130,14 +139,9 @@ object Quantiles {
     * deletions; the audit branch scans it, the sketch never does. */
   def gridQuantilesFromSketch(spark: org.apache.spark.sql.SparkSession,
       df: DataFrame, path: String, valueCol: String, strataCol: String,
-      lo: Double, hi: Double, bits: Int, qPpm: Seq[Long]): DataFrame = {
-    // recursiveFileLookup: flat build/append/delete files plus any
-    // per-batch dirs an ingest loop commits (the CMS convention)
-    val sketch = spark.read.option("recursiveFileLookup", "true").parquet(path)
-      .groupBy(col("stratum"), col("cell")).agg(sum(col("cnt")).as("cnt"))
-      .filter(col("cnt") =!= 0L)
-    quantilesWith(prep(df, valueCol, strataCol), sketch, lo, hi, bits, qPpm)
-  }
+      lo: Double, hi: Double, bits: Int, qPpm: Seq[Long]): DataFrame =
+    quantilesWith(prep(df, valueCol, strataCol), histogramMerged(spark, path),
+      lo, hi, bits, qPpm)
 
   /** The shared core: estimate from `sketch`, exact audit from
     * `base` — both in the (stratum, ...) shapes [[prep]] and

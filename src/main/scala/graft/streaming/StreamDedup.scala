@@ -130,16 +130,11 @@ object StreamDedup {
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = new org.apache.hadoop.fs.Path(s"$indexPath/_batches/$batchId")
-        val fs = marker.getFileSystem(
-          batch.sparkSession.sessionState.newHadoopConf())
-        if (!fs.exists(marker)) {
+        AtomicIngest.once(batch.sparkSession, s"$indexPath/_batches", batchId) {
           // eager probe: writes matches AND releases the batch's
           // persisted signatures (no cache growth across micro-batches)
           Dedup.probeIndexInto(batch, indexPath, resultPath, p)
           Dedup.appendSignatureIndex(batch, indexPath, p)
-          fs.create(marker, true).close()
-          ()
         }
       }
       .start()
@@ -219,10 +214,7 @@ object StreamDedup {
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = new org.apache.hadoop.fs.Path(s"$graphPath/_gbatches/$batchId")
-        val fs = marker.getFileSystem(
-          batch.sparkSession.sessionState.newHadoopConf())
-        if (!fs.exists(marker)) {
+        AtomicIngest.once(batch.sparkSession, s"$graphPath/_gbatches", batchId) {
           Dedup.appendSimilarityGraph(batch, graphPath, p)
           if (maintainLabels)
             Dedup.refreshComponentLabels(batch.sparkSession, graphPath)
@@ -232,8 +224,6 @@ object StreamDedup {
             Dedup.refreshRankScores(batch.sparkSession, graphPath)
           if (maintainCommunities)
             Dedup.refreshLpCommunities(batch.sparkSession, graphPath)
-          fs.create(marker, true).close()
-          ()
         }
       }
       .start()
@@ -275,10 +265,7 @@ object StreamDedup {
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = new org.apache.hadoop.fs.Path(s"$graphPath/_gbatches/$batchId")
-        val fs = marker.getFileSystem(
-          batch.sparkSession.sessionState.newHadoopConf())
-        if (!fs.exists(marker)) {
+        AtomicIngest.once(batch.sparkSession, s"$graphPath/_gbatches", batchId) {
           val dels = batch.filter(col("op") === "delete").select(col("doc_id"))
           // fail-fast on the out-of-contract shape instead of silently
           // ingesting it: tombstones run FIRST, so a doc added and
@@ -303,8 +290,6 @@ object StreamDedup {
             Dedup.refreshRankScores(batch.sparkSession, graphPath)
           if (maintainCommunities)
             Dedup.refreshLpCommunities(batch.sparkSession, graphPath)
-          fs.create(marker, true).close()
-          ()
         }
       }
       .start()

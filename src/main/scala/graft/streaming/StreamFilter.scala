@@ -28,12 +28,6 @@ object StreamFilter {
     CorpusOps.bloomFilterBits(docs, words, p)
       .write.mode("overwrite").parquet(bitsPath)
 
-  /** Per micro-batch of (doc_id, text) rows: probe the stored bitset,
-    * append flagged (train_id, n_sh, n_hits) rows to `resultPath`.
-    * The same Hadoop-FS `_batches/<id>` idempotence marker as the
-    * other ingest loops (kept under `resultPath` — the filter itself
-    * is never written) makes restart/retry emit each batch once,
-    * wherever the paths live (HDFS/S3/local). */
   /** Streaming admission through a FROZEN quality gate — the other
     * read-only-artifact filter: [[CorpusOps.qualityGateBuild]] persists
     * the groups-sized per-group cut frame once, each micro-batch is
@@ -48,15 +42,10 @@ object StreamFilter {
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = new org.apache.hadoop.fs.Path(s"$resultPath/_batches/$batchId")
-        val fs = marker.getFileSystem(
-          batch.sparkSession.sessionState.newHadoopConf())
-        if (!fs.exists(marker)) {
+        AtomicIngest.once(batch.sparkSession, s"$resultPath/_batches", batchId) {
           val cuts = batch.sparkSession.read.parquet(cutsPath)
           CorpusOps.qualityGateApply(batch, cuts, groupCol)
             .write.mode("append").parquet(resultPath)
-          fs.create(marker, true).close()
-          ()
         }
       }
       .start()
@@ -74,19 +63,21 @@ object StreamFilter {
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = new org.apache.hadoop.fs.Path(s"$resultPath/_batches/$batchId")
-        val fs = marker.getFileSystem(
-          batch.sparkSession.sessionState.newHadoopConf())
-        if (!fs.exists(marker)) {
+        AtomicIngest.once(batch.sparkSession, s"$resultPath/_batches", batchId) {
           val counts = batch.sparkSession.read.parquet(lmPath)
           CorpusOps.lmScoreWith(batch, counts)
             .write.mode("append").parquet(resultPath)
-          fs.create(marker, true).close()
-          ()
         }
       }
       .start()
 
+  /** Per micro-batch of (doc_id, text) rows: probe the stored bitset,
+    * append flagged (train_id, n_sh, n_hits) rows to `resultPath`.
+    * The same Hadoop-FS `_batches/<id>` idempotence marker as the
+    * other ingest loops ([[AtomicIngest.once]], kept under
+    * `resultPath` — the filter itself
+    * is never written) makes restart/retry emit each batch once,
+    * wherever the paths live (HDFS/S3/local). */
   def ingestBloom(docs: DataFrame, bitsPath: String, resultPath: String,
       checkpoint: String, words: Int = 8192,
       p: CorpusOps.ContaminationParams = CorpusOps.ContaminationParams())
@@ -94,15 +85,10 @@ object StreamFilter {
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = new org.apache.hadoop.fs.Path(s"$resultPath/_batches/$batchId")
-        val fs = marker.getFileSystem(
-          batch.sparkSession.sessionState.newHadoopConf())
-        if (!fs.exists(marker)) {
+        AtomicIngest.once(batch.sparkSession, s"$resultPath/_batches", batchId) {
           val bits = batch.sparkSession.read.parquet(bitsPath)
           CorpusOps.bloomProbe(batch, bits, words, p)
             .write.mode("append").parquet(resultPath)
-          fs.create(marker, true).close()
-          ()
         }
       }
       .start()

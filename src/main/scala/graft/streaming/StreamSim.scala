@@ -48,15 +48,10 @@ object StreamSim {
     emb.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = new org.apache.hadoop.fs.Path(s"$indexPath/_batches/$batchId")
-        val fs = marker.getFileSystem(
-          batch.sparkSession.sessionState.newHadoopConf())
-        if (!fs.exists(marker)) {
+        AtomicIngest.once(batch.sparkSession, s"$indexPath/_batches", batchId) {
           Similarity.annIndexTopKBatch(batch, indexPath, k, bands, bucketShift)
             .write.mode("append").parquet(resultPath)
           Similarity.annIndexAppend(batch, indexPath, bands)
-          fs.create(marker, true).close()
-          ()
         }
       }
       .start()

@@ -29,13 +29,8 @@ object StreamText {
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = new org.apache.hadoop.fs.Path(s"$indexPath/_batches/$batchId")
-        val fs = marker.getFileSystem(
-          batch.sparkSession.sessionState.newHadoopConf())
-        if (!fs.exists(marker)) {
+        AtomicIngest.once(batch.sparkSession, s"$indexPath/_batches", batchId) {
           Postings.appendIndex(batch, indexPath)
-          fs.create(marker, true).close()
-          ()
         }
       }
       .start()
@@ -147,9 +142,12 @@ object StreamText {
       .start()
 }
 
-/** Atomic per-batch commit for duplicate-sensitive persisted
-  * artifacts (BPE word counts, Gram partials, NB classifier counts):
-  * stage the batch's
+/** The per-micro-batch guards of every `foreachBatch` ingest loop:
+  * [[once]], the plain `_batches/<id>` marker, and [[commitBatch]].
+  *
+  * [[commitBatch]] is the atomic per-batch commit for
+  * duplicate-sensitive persisted artifacts (BPE word counts, Gram
+  * partials, NB classifier counts, CMS partials): stage the batch's
   * partial frame under a hidden directory inside the artifact, then
   * publish it with ONE filesystem rename to a visible `batch_<id>`
   * subdirectory. Readers use `recursiveFileLookup`, so they see the
@@ -162,6 +160,26 @@ object StreamText {
   * ADVICE crash window where the marker was created after a
   * non-atomic append. */
 object AtomicIngest {
+
+  /** Run `work` for micro-batch `batchId` unless `<markerDir>/<id>`
+    * exists, then create that empty marker file — the at-least-once
+    * guard of the non-duplicate-sensitive loops. NOT atomic: a crash
+    * after `work` and before the marker re-runs `work` on replay (each
+    * loop documents why its work tolerates that); duplicate-sensitive
+    * artifacts use [[commitBatch]]. The marker resolves through the
+    * Hadoop FileSystem API, so the guard works wherever the artifact
+    * lives (HDFS/S3/local), and [[graft.core.DirSwap.swap]] carries
+    * `_batches` markers across compactions. */
+  def once(spark: org.apache.spark.sql.SparkSession, markerDir: String,
+      batchId: Long)(work: => Unit): Unit = {
+    val marker = new org.apache.hadoop.fs.Path(s"$markerDir/$batchId")
+    val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(marker)) {
+      work
+      fs.create(marker, true).close()
+    }
+  }
+
   def commitBatch(spark: org.apache.spark.sql.SparkSession,
       artifactPath: String, batchId: Long)(
       writePartial: String => Unit): Unit = {

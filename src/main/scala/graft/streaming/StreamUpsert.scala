@@ -40,14 +40,9 @@ object StreamUpsert {
     changes.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = new org.apache.hadoop.fs.Path(s"$sinkPath/_batches/$batchId")
-        val fs = marker.getFileSystem(
-          batch.sparkSession.sessionState.newHadoopConf())
-        if (!fs.exists(marker)) {
+        AtomicIngest.once(batch.sparkSession, s"$sinkPath/_batches", batchId) {
           Layout.upsertPartitioned(sinkPath, batch, partCol, keyCols,
             orderCols.map(c => org.apache.spark.sql.functions.col(c).desc))
-          fs.create(marker, true).close()
-          ()
         }
       }
       .start()
@@ -72,8 +67,9 @@ object StreamUpsert {
     * identical content, which retention vacuums; StreamingSpec
     * replays exactly that crash shape. The table must exist
     * ([[graft.layout.VersionedTable.create]]) before the stream
-    * starts. */
-  /** `maintainOptimize` keeps the CURVE LAYOUT live under the stream
+    * starts.
+    *
+    * `maintainOptimize` keeps the CURVE LAYOUT live under the stream
     * (the same maintain-flag contract as the similarity-graph loop's
     * sidecars): after each commit the loop runs
     * [[graft.layout.VersionedTable.optimizeIncremental]], re-clustering
@@ -92,16 +88,11 @@ object StreamUpsert {
     changes.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = new org.apache.hadoop.fs.Path(s"$tablePath/_batches/$batchId")
-        val fs = marker.getFileSystem(
-          batch.sparkSession.sessionState.newHadoopConf())
-        if (!fs.exists(marker)) {
+        AtomicIngest.once(batch.sparkSession, s"$tablePath/_batches", batchId) {
           graft.layout.VersionedTable.applyCdc(batch, tablePath, keyCol)
           if (maintainOptimize)
             graft.layout.VersionedTable.optimizeIncremental(
               batch.sparkSession, tablePath, keyCol)
-          fs.create(marker, true).close()
-          ()
         }
       }
       .start()

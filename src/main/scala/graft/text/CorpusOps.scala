@@ -897,6 +897,14 @@ object CorpusOps {
       docs: DataFrame, path: String, vocabSize: Int = 64,
       idCol: String = "doc_id", sourceCol: String = "source",
       textCol: String = "text"): DataFrame = {
+    val (tok, dc) = nbMerged(spark, path)
+    nbScoreWith(docs, tok, dc, vocabSize, idCol, sourceCol, textCol)
+  }
+
+  /** The NB merge law, shared by serve and compaction: plain sum of
+    * every committed part's (token, src) tf/df and per-src n_train. */
+  private def nbMerged(spark: org.apache.spark.sql.SparkSession,
+      path: String): (DataFrame, DataFrame) = {
     val parts = nbCommittedParts(spark, path)
     require(parts.nonEmpty, s"nb counts artifact has no committed parts: $path")
     val tok = spark.read.parquet(parts.map(p => s"$p/tokens"): _*)
@@ -904,7 +912,7 @@ object CorpusOps {
       .agg(sum(col("tf")).as("tf"), sum(col("df")).as("df"))
     val dc = spark.read.parquet(parts.map(p => s"$p/docs"): _*)
       .groupBy(col("src")).agg(sum(col("n_train")).as("n_train"))
-    nbScoreWith(docs, tok, dc, vocabSize, idCol, sourceCol, textCol)
+    (tok, dc)
   }
 
   /** The COMMITTED part directories of an NB counts artifact — every
@@ -941,9 +949,10 @@ object CorpusOps {
     * selection anyway via the `vtf > 0` guard; per-source doc counts
     * are kept even at zero because the source's presence in the label
     * seed is load-bearing, see [[nbCountsDelete]]'s honest limit),
-    * then swap the whole artifact root in crash-safely. Stream
-    * idempotence is preserved by recreating every superseded part
-    * name as an EMPTY directory: [[graft.streaming.AtomicIngest]]'s
+    * then replace the whole artifact root crash-safely. Stream
+    * idempotence is preserved by [[graft.core.DirSwap]]'s marker rule,
+    * which recreates every superseded part name as an EMPTY
+    * directory: [[graft.streaming.AtomicIngest]]'s
     * re-delivery check is `exists(batch_<id>)`, so a restarted stream
     * still skips its re-delivered batches, while the parts listing
     * skips the empty markers (no `tokens` subdir). Repeated
@@ -953,34 +962,13 @@ object CorpusOps {
     * lose its staging dir and crash-retry (the documented pause
     * contract — the streaming specs compact between batches). */
   def compactNbCounts(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val parts = nbCommittedParts(spark, path)
-    require(parts.nonEmpty, s"nb counts artifact has no committed parts: $path")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    // every non-hidden child (data parts AND old markers) must
-    // reappear as a marker in the compacted root
-    val markerNames = fs.listStatus(root).toSeq
-      .filter { st =>
-        val n = st.getPath.getName
-        st.isDirectory && !n.startsWith("_") && !n.startsWith(".")
-      }
-      .map(_.getPath.getName)
-    val tmp = path + "_compacting"
-    val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-    fs.delete(tmpPath, true)
-    spark.read.parquet(parts.map(p => s"$p/tokens"): _*)
-      .groupBy(col("token"), col("src"))
-      .agg(sum(col("tf")).as("tf"), sum(col("df")).as("df"))
-      .filter(col("tf") =!= 0L || col("df") =!= 0L)
-      .write.mode("overwrite").parquet(s"$tmp/compacted/tokens")
-    spark.read.parquet(parts.map(p => s"$p/docs"): _*)
-      .groupBy(col("src")).agg(sum(col("n_train")).as("n_train"))
-      .write.mode("overwrite").parquet(s"$tmp/compacted/docs")
-    markerNames.filterNot(_ == "compacted")
-      .foreach(n => fs.mkdirs(new org.apache.hadoop.fs.Path(tmpPath, n)))
-    graft.core.DirSwap.swap(fs, root, tmpPath)
-  }
+      path: String): Unit =
+    graft.core.DirSwap.replace(spark, path) { tmp =>
+      val (tok, dc) = nbMerged(spark, path)
+      tok.filter(col("tf") =!= 0L || col("df") =!= 0L)
+        .write.mode("overwrite").parquet(s"$tmp/compacted/tokens")
+      dc.write.mode("overwrite").parquet(s"$tmp/compacted/docs")
+    }
 
   /** The shared NB core: derive labels (alternate over the source set
     * in md5-hex order), the top-V vocabulary, the fixed-point log2
@@ -1694,13 +1682,24 @@ object CorpusOps {
   /** Compact a CMS artifact grown by appends and deletes: one merged
     * partial, zero-netted cells physically dropped (an absent cell IS
     * zero under the sum merge, so this is zero-logical-change —
-    * spec'd), atomic directory swap, stream markers preserved. */
+    * spec'd), atomic directory swap ([[graft.core.DirSwap.replace]]),
+    * stream markers preserved — a streamed `batch_<id>` dir stays as
+    * an empty re-delivery marker. */
   def compactCmsSketch(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit =
-    replaceDir(spark, path,
-      spark.read.option("recursiveFileLookup", "true").parquet(path)
-        .groupBy(col("r"), col("b")).agg(sum(col("cms")).as("cms"))
-        .filter(col("cms") =!= 0L))
+    // a sketch is KBs at any corpus size — one output file IS the point
+    graft.core.DirSwap.replace(spark, path)(
+      cmsMerged(spark, path).coalesce(1).write.mode("overwrite").parquet(_))
+
+  /** The CMS merge law, shared by serve and compaction: sum per cell,
+    * zero-netted cells dropped (absent IS zero under the sum merge).
+    * recursiveFileLookup: flat build/append/delete files plus the
+    * per-batch dirs the streaming CDC loop commits atomically. */
+  private def cmsMerged(spark: org.apache.spark.sql.SparkSession,
+      path: String): DataFrame =
+    spark.read.option("recursiveFileLookup", "true").parquet(path)
+      .groupBy(col("r"), col("b")).agg(sum(col("cms")).as("cms"))
+      .filter(col("cms") =!= 0L)
 
   /** Serve (token, true_cnt, cms_est) from a persisted CMS: sum-merge
     * the stored partials (sketch-sized), topN true counts from `docs`
@@ -1708,14 +1707,9 @@ object CorpusOps {
     * comes from the artifact alone. */
   def cmsEstimateFromSketch(spark: org.apache.spark.sql.SparkSession,
       docs: DataFrame, path: String, depth: Int = 4, width: Int = 1024,
-      topN: Int = 30, textCol: String = "text"): DataFrame = {
-    // recursiveFileLookup: flat build/append/delete files plus the
-    // per-batch dirs the streaming CDC loop commits atomically
-    val sketch = spark.read.option("recursiveFileLookup", "true").parquet(path)
-      .groupBy(col("r"), col("b")).agg(sum(col("cms")).as("cms"))
-      .filter(col("cms") =!= 0L)
-    cmsEstimateWith(tokenCounts(docs, textCol), sketch, depth, width, topN)
-  }
+      topN: Int = 30, textCol: String = "text"): DataFrame =
+    cmsEstimateWith(tokenCounts(docs, textCol), cmsMerged(spark, path),
+      depth, width, topN)
 
   /** One CDC micro-batch as ONE CMS partial ([[writeNbCdcPartial]]'s
     * law for the frequency sketch): adds count positive, tombstoned
@@ -2051,16 +2045,12 @@ object CorpusOps {
     * filter rather than resurrected — the serve path never saw them
     * either. */
   def compactLmIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val tmp = path + "_compacting"
-    spark.read.parquet(path)
-      .groupBy(col("g")).agg(sum(col("n")).as("n"))
-      .filter(col("n") > 0)
-      .write.mode("overwrite").parquet(tmp)
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.DirSwap.swap(fs, hPath, new org.apache.hadoop.fs.Path(tmp))
-  }
+      path: String): Unit =
+    graft.core.DirSwap.replace(spark, path)(
+      spark.read.parquet(path)
+        .groupBy(col("g")).agg(sum(col("n")).as("n"))
+        .filter(col("n") > 0)
+        .write.mode("overwrite").parquet(_))
 
   /** Serve path: score a frame against the stored LM counts. */
   def lmScoreIndexed(spark: org.apache.spark.sql.SparkSession,
@@ -2430,8 +2420,14 @@ object CorpusOps {
     * read-time finisher — sketch-sized work, no corpus access. */
   def hllSketchEstimate(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    hllEstimate(spark.read.parquet(path)
-      .groupBy(col("stratum"), col("reg")).agg(max(col("mx")).as("mx")))
+    hllEstimate(hllMerged(spark, path))
+
+  /** The HLL merge law, shared by serve and compaction: max per
+    * (stratum, register). */
+  private def hllMerged(spark: org.apache.spark.sql.SparkSession,
+      path: String): DataFrame =
+    spark.read.parquet(path)
+      .groupBy(col("stratum"), col("reg")).agg(max(col("mx")).as("mx"))
 
   /** KMV twin: store each batch's per-stratum bottom-k member rows. */
   def writeKmvSketch(docs: DataFrame, path: String, k: Int = 16,
@@ -2449,11 +2445,15 @@ object CorpusOps {
   private def kmvPartial(docs: DataFrame, k: Int, shingleK: Int,
       strataCol: String, textCol: String): DataFrame = {
     require(k > 1, s"KMV needs k >= 2, got $k")
+    bottomK(docs.select(col(strataCol).as("stratum"),
+      explode(Dedup.shingleHashes(col(textCol), shingleK)).as("h")), k)
+  }
+
+  /** The KMV merge law — a partial's own law too: distinct, then the
+    * per-stratum bottom-k (stratum, h) rows. */
+  private def bottomK(hashes: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("stratum")).orderBy(col("h"))
-    docs
-      .select(col(strataCol).as("stratum"),
-        explode(Dedup.shingleHashes(col(textCol), shingleK)).as("h"))
-      .distinct()
+    hashes.distinct()
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
       .select(col("stratum"), col("h"))
   }
@@ -2467,10 +2467,8 @@ object CorpusOps {
     * is the entire point of shipping one. */
   def kmvSketchEstimate(spark: org.apache.spark.sql.SparkSession,
       path: String, k: Int = 16): DataFrame = {
-    val w = Window.partitionBy(col("stratum")).orderBy(col("h"))
     val numLit = lit(new java.math.BigDecimal((BigInt(k - 1) << 60).bigInteger))
-    spark.read.parquet(path).distinct()
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+    bottomK(spark.read.parquet(path), k)
       .groupBy(col("stratum"))
       .agg(count(lit(1)).as("n_sketch"), max(col("h")).as("kth_min"))
       .select(col("stratum"), col("n_sketch"),
@@ -2494,33 +2492,16 @@ object CorpusOps {
     * atomic directory rename. */
   def compactHllSketch(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit =
-    replaceDir(spark, path,
-      spark.read.parquet(path)
-        .groupBy(col("stratum"), col("reg")).agg(max(col("mx")).as("mx")))
+    graft.core.DirSwap.replace(spark, path)(
+      hllMerged(spark, path).coalesce(1).write.mode("overwrite").parquet(_))
 
   /** KMV twin of [[compactHllSketch]]: distinct + bottom-k per
     * stratum — the stored shape [[kmvSketchEstimate]] derives. */
   def compactKmvSketch(spark: org.apache.spark.sql.SparkSession,
-      path: String, k: Int = 16): Unit = {
-    val w = Window.partitionBy(col("stratum")).orderBy(col("h"))
-    replaceDir(spark, path,
-      spark.read.parquet(path).distinct()
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-        .select(col("stratum"), col("h")))
-  }
-
-  private[graft] def replaceDir(spark: org.apache.spark.sql.SparkSession,
-      path: String, merged: DataFrame): Unit = {
-    val tmp = path + "_compacting"
-    // a sketch is KBs at any corpus size — one output file IS the point
-    merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val hTmp = new org.apache.hadoop.fs.Path(tmp)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // crash-safe two-rename swap; stream-ingest markers survive
-    graft.core.DirSwap.preserveBatchMarkers(fs, hPath, hTmp)
-    graft.core.DirSwap.swap(fs, hPath, hTmp)
-  }
+      path: String, k: Int = 16): Unit =
+    graft.core.DirSwap.replace(spark, path)(
+      bottomK(spark.read.parquet(path), k)
+        .coalesce(1).write.mode("overwrite").parquet(_))
 
   /** KMV sketch set operations (Beyer et al. 2007 §4) — what makes
     * bottom-k sketches an ALGEBRA rather than a counter: for every

@@ -124,17 +124,12 @@ object Postings {
     * index are a no-op. */
   def deleteDocs(spark: SparkSession, path: String,
       deletedIds: DataFrame, idCol: String = "doc_id"): Unit = {
-    val tmp = path + "_compacting"
     val del = deletedIds.select(col(idCol).as("doc_id")).distinct()
-    spark.read.parquet(path)
-      .join(broadcast(del), Seq("doc_id"), "left_anti")
-      .select(col("token"), col("doc_id"), col("pos"))
-      .write.mode("overwrite").parquet(tmp)
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val hTmp = new org.apache.hadoop.fs.Path(tmp)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.DirSwap.preserveBatchMarkers(fs, hPath, hTmp)
-    graft.core.DirSwap.swap(fs, hPath, hTmp)
+    graft.core.DirSwap.replace(spark, path)(
+      spark.read.parquet(path)
+        .join(broadcast(del), Seq("doc_id"), "left_anti")
+        .select(col("token"), col("doc_id"), col("pos"))
+        .write.mode("overwrite").parquet(_))
   }
 
   /** Re-sort the whole index into token-clustered files after a run
@@ -147,16 +142,10 @@ object Postings {
     * directory before the swap, so a restarted stream's re-delivered
     * batch still finds its marker and append == from-scratch
     * serve-equivalence survives compaction. */
-  def compactIndex(spark: SparkSession, path: String): Unit = {
-    val tmp = path + "_compacting"
-    spark.read.parquet(path)
-      .repartitionByRange(col("token"))
-      .sortWithinPartitions(col("token"), col("doc_id"), col("pos"))
-      .write.mode("overwrite").parquet(tmp)
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val hTmp = new org.apache.hadoop.fs.Path(tmp)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.DirSwap.preserveBatchMarkers(fs, hPath, hTmp)
-    graft.core.DirSwap.swap(fs, hPath, hTmp)
-  }
+  def compactIndex(spark: SparkSession, path: String): Unit =
+    graft.core.DirSwap.replace(spark, path)(
+      spark.read.parquet(path)
+        .repartitionByRange(col("token"))
+        .sortWithinPartitions(col("token"), col("doc_id"), col("pos"))
+        .write.mode("overwrite").parquet(_))
 }

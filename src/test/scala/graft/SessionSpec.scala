@@ -1,9 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the one-session-factory rule: every main and every suite gets
@@ -12,25 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * between copies again; and `src/main` carries only the five kept
   * mains, not one-off measurement mains. */
 class SessionSpec extends AnyFunSuite with LocalSparkSuite {
+  import SourceScan.codeLines
 
   override protected def sessionConf: Map[String, String] = Map(
     "spark.sql.shuffle.partitions" -> "3")
 
   private val KeptMains = Set("Bench", "Verify", "PlanAudit", "StageProfile", "ScaleCheck")
-
-  /** (file, code lines) of every Scala source under `root`, with line
-    * and scaladoc comments dropped. */
-  private def codeLines(root: String): Seq[(Path, Seq[String])] = {
-    val dir = Paths.get(root)
-    assert(Files.isDirectory(dir), s"$dir missing (cwd=${System.getProperty("user.dir")})")
-    val walk = Files.walk(dir)
-    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq.sorted.map { f =>
-      f -> Files.readAllLines(f).asScala.toSeq.filterNot { l =>
-        val t = l.trim
-        t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
-      }
-    } finally walk.close()
-  }
 
   test("the session builder is called in code only in graft.Session") {
     val builder = "SparkSession" + ".builder" // split, or this line would match

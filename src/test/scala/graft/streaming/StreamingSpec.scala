@@ -834,6 +834,26 @@ class StreamingSpec extends AnyFunSuite with LocalSparkSuite {
     assert(artifactFiles() == before)
   }
 
+  test("AtomicIngest.once runs its work exactly once per (markerDir, batch id)") {
+    val tmp = Files.createTempDirectory("graft_once").toString
+    var runs = Vector.empty[String]
+    def deliver(dir: String, id: Long): Unit =
+      AtomicIngest.once(spark, s"$tmp/$dir", id) { runs :+= s"$dir/$id" }
+    deliver("_batches", 0L)
+    deliver("_batches", 0L) // re-delivery: skipped
+    deliver("_batches", 1L)
+    deliver("_gbatches", 0L) // another marker dir keeps its own ids
+    deliver("_gbatches", 0L)
+    assert(runs == Vector("_batches/0", "_batches/1", "_gbatches/0"))
+    assert(new java.io.File(s"$tmp/_batches/1").isFile)
+    // work that throws leaves no marker, so the replay runs it again
+    intercept[IllegalStateException] {
+      AtomicIngest.once(spark, s"$tmp/_batches", 2L) { throw new IllegalStateException("crash") }
+    }
+    deliver("_batches", 2L)
+    assert(runs.last == "_batches/2")
+  }
+
   test("hll register sketch runs as a streaming aggregation; duplicate batches change nothing") {
     // like the grid quantile sketch: the register frame's merge law
     // (max per (stratum, reg)) IS Structured Streaming's incremental

@@ -1294,6 +1294,41 @@ class CorpusOpsSpec extends AnyFunSuite with LocalSparkSuite {
     assert(served(survivors) == survScratch)
   }
 
+  test("cms compact: a stream-committed batch dir survives as an empty re-delivery marker") {
+    import spark.implicits._
+    val d = (1L to 40L).map(i => (i, s"alpha beta tok$i")).toDF("doc_id", "text")
+    val surv = d.filter(col("doc_id") % 4 =!= 0)
+    val path = java.nio.file.Files
+      .createTempDirectory("cms_compact").toString + "/cms"
+    def served() = {
+      val out = CorpusOps.cmsEstimateFromSketch(spark, surv, path, topN = 10)
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+      spark.catalog.clearCache()
+      out
+    }
+    // build + one STREAM-committed CDC batch (its batch_1 dir is the
+    // re-delivery marker) + a delete, then compact
+    CorpusOps.writeCmsSketch(d.filter(col("doc_id") <= 20), path)
+    val batch1 = d.filter(col("doc_id") > 20).withColumn("op", lit("add"))
+    graft.streaming.AtomicIngest.commitBatch(spark, path, 1L) { staging =>
+      CorpusOps.writeCmsCdcPartial(batch1, staging)
+    }
+    CorpusOps.deleteCmsSketch(d.filter(col("doc_id") % 4 === 0), path)
+    val before = served()
+    CorpusOps.compactCmsSketch(spark, path)
+    assert(served() === before && before.nonEmpty)
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val marker = new org.apache.hadoop.fs.Path(s"$path/batch_1")
+    assert(fs.exists(marker), "compaction dropped the batch_1 re-delivery marker")
+    assert(fs.listStatus(marker).isEmpty, "superseded batch dir kept its data")
+    // a re-delivered batch 1 must NOT run again (it would double-count)
+    graft.streaming.AtomicIngest.commitBatch(spark, path, 1L) { _ =>
+      fail("re-delivered batch was not skipped after compaction")
+    }
+    assert(served() === before)
+  }
+
   test("weightedSample: matches the naive prefix-sum spec; picks telescope to floor(T/stride)") {
     // sparse unordered ids, varying lengths — same shape as the pack test
     val d = docs(Seq(7L, 100L, 3L, 42L, 999L, 500L).zipWithIndex.map {
